@@ -11,8 +11,10 @@ each kernel is a distributed Spark validation query:
   the exact same check list is the correctness oracle.
 - **CHECKALLOC** — file-level allocation integrity from parquet
   footers: every pinned file exists, parses, is non-empty; footer row
-  counts sum consistently (IC:547-548 analogue). Footer reads are
-  distributed (sources.catalog.footer_stats_df).
+  counts sum consistently (IC:547-548 analogue). Up to 64 files are
+  probed and summed on the driver with no Spark job; larger listings
+  fan the footer reads out over executors
+  (sources.catalog.footer_stats_df) and sum the collected rows.
 - **CHECKCATALOG** — catalog↔storage consistency: table location has
   files, schema is readable, footer schemas agree across files, and
   (when a declared schema is registered) declared == stored
@@ -37,7 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..expectations import TableExpectations, expectations_for
-from ..sources.catalog import FileMeta, ObjectMeta, footer_stats_df
+from ..sources.catalog import (
+    DRIVER_SIDE_FOOTER_LIMIT,
+    FileMeta,
+    ObjectMeta,
+    footer_stats_df,
+    probe_footers,
+)
 from ..sources.loader import load_table
 
 BROADCAST_THRESHOLD_BYTES = 256 * 1024 * 1024  # dims under this broadcast
@@ -191,30 +199,29 @@ def run_checkalloc(
         return KernelResult(
             "CHECKALLOC", obj.database_name, obj.object_name, False, {}, ["no data files"]
         )
-    stats = footer_stats_df(spark, obj.files)
-    agg = stats.agg(
-        F.count("*").alias("n_files"),
-        F.sum(F.when(~F.col("footer_ok"), 1).otherwise(0)).alias("bad_files"),
-        F.sum(F.when(F.col("size") == 0, 1).otherwise(0)).alias("zero_byte_files"),
-        F.sum("footer_row_count").alias("footer_rows"),
-    ).collect()[0]
+    if len(obj.files) <= DRIVER_SIDE_FOOTER_LIMIT:
+        stats = probe_footers(obj.files)
+    else:
+        stats = footer_stats_df(spark, obj.files).collect()
+    bad = [r for r in stats if not r["footer_ok"]]
+    counts = [r["footer_row_count"] for r in stats if r["footer_row_count"] is not None]
     metrics = {
-        "n_files": agg["n_files"],
-        "bad_files": agg["bad_files"],
-        "zero_byte_files": agg["zero_byte_files"],
-        "footer_rows": agg["footer_rows"],
+        "n_files": len(stats),
+        "bad_files": len(bad),
+        "zero_byte_files": sum(1 for r in stats if r["size"] == 0),
+        # SQL SUM: NULL when no file has a readable footer
+        "footer_rows": sum(counts) if counts else None,
         "total_bytes": obj.total_bytes,
     }
-    if agg["bad_files"]:
-        for r in stats.filter(~F.col("footer_ok")).select("path", "error").collect():
-            errors.append(f"unreadable footer: {r['path']}: {r['error']}")
-    if agg["zero_byte_files"]:
-        errors.append(f"{agg['zero_byte_files']} zero-byte file(s)")
+    for r in bad:
+        errors.append(f"unreadable footer: {r['path']}: {r['error']}")
+    if metrics["zero_byte_files"]:
+        errors.append(f"{metrics['zero_byte_files']} zero-byte file(s)")
     if full and not errors:
         actual = load_table(spark, *[f.path for f in obj.files]).count()
         metrics["scanned_rows"] = actual
-        if actual != agg["footer_rows"]:
-            errors.append(f"scan count {actual} != footer sum {agg['footer_rows']}")
+        if actual != metrics["footer_rows"]:
+            errors.append(f"scan count {actual} != footer sum {metrics['footer_rows']}")
     return KernelResult(
         "CHECKALLOC", obj.database_name, obj.object_name, not errors, metrics, errors
     )

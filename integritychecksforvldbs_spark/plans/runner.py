@@ -10,7 +10,13 @@ IC:548,555,694 and DIC:1365,1487,1524,1652,1691).  It:
   (CommandLog.sql:7-28 schema).  The reference INSERTs a start row then
   UPDATEs it (CE:185-191,242-249); on an append-only parquet log the
   idiomatic unit is the completed row, buffered in the driver and
-  flushed in batches (SURVEY §2.1 #8).
+  flushed in batches (SURVEY §2.1 #8).  Each flush is one new part
+  file written by pyarrow on the driver (no Spark job) under a hidden
+  ``.``-prefixed name and renamed in place, so a crash never leaves a
+  partial part; Spark (:meth:`CommandLog.df`) and DuckDB read the
+  directory.  Row ids continue from the largest id already in the log,
+  read from the parts' footer statistics (CommandLog.ID is an IDENTITY
+  key, CL:7).
 - dry-run (``execute='N'``, CE:197,204): the command is logged with
   outcome 'Not Executed' and the kernel is skipped.
 """
@@ -18,6 +24,7 @@ IC:548,555,694 and DIC:1365,1487,1524,1652,1691).  It:
 from __future__ import annotations
 
 import logging
+import os
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -27,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..operators.kernels import KernelResult
+from .arrowio import write_rows
 from .specs import CheckSpec
 
 logger = logging.getLogger("integritychecksforvldbs_spark")
@@ -57,10 +65,30 @@ def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+def _max_log_id(path: str) -> int:
+    """The largest ``id`` in a log directory's parts, from their footer
+    statistics (Spark and pyarrow both write min/max for it)."""
+    import pyarrow.parquet as pq
+
+    best = 0
+    if not os.path.isdir(path):
+        return best
+    for name in os.listdir(path):
+        if name.startswith((".", "_")) or not name.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(path, name)).metadata
+        col = md.schema.names.index("id")
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(col).statistics
+            if st is not None and st.has_min_max:
+                best = max(best, st.max)
+    return best
+
+
 class CommandLog:
     """Append-only parquet audit log (CommandLog.sql analogue).
 
-    Rows are buffered on the driver and flushed as one parquet append
+    Rows are buffered on the driver and flushed as one parquet part
     per flush — a 100 TB run issues thousands of commands; one tiny
     file per command would melt the file listing, so the flush batches.
     """
@@ -70,7 +98,7 @@ class CommandLog:
         self.path = path
         self.flush_every = flush_every
         self._buffer: list[dict[str, Any]] = []
-        self._next_id = 1
+        self._next_id = _max_log_id(path) + 1 if path else 1
 
     def append(self, row: dict[str, Any]) -> int:
         row = dict(row)
@@ -84,11 +112,16 @@ class CommandLog:
     def flush(self) -> None:
         if not self.path or not self._buffer:
             return
-        df = self.spark.createDataFrame(
-            [tuple(r.get(f.name) for f in COMMAND_LOG_SCHEMA.fields) for r in self._buffer],
-            COMMAND_LOG_SCHEMA,
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, "." + name)
+        try:
+            write_rows(self._buffer, COMMAND_LOG_SCHEMA, tmp)
+            os.rename(tmp, os.path.join(self.path, name))
+        except Exception:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
         self._buffer.clear()
 
     def df(self) -> DataFrame:

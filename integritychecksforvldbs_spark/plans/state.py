@@ -3,9 +3,14 @@
 Schema mirrors IntegrityChecks_VLDB.sql:41-65 (FIXTURES.md §B
 ``check_objects``).  The ledger is metadata-sized (one row per table,
 not per data row), so it lives in driver memory during a run and is
-persisted to parquet with an atomic write-temp-then-rename — the
-single-writer read-modify-overwrite plan from SURVEY §7.4 risk 1.  A
-Delta ``MERGE INTO`` drop-in is the multi-writer upgrade path.
+persisted as a directory holding one parquet file, written by pyarrow
+on the driver (no Spark job) into a temp directory that is then
+renamed over the old one — the single-writer read-modify-overwrite
+plan from SURVEY §7.4 risk 1.  A crash between the swap's two renames
+leaves the previous ledger at ``<path>.old``, which the next load
+falls back to.  Spark (``spark.read.schema(STATE_SCHEMA)``) and DuckDB
+(``read_parquet``) read the file; ledgers written by Spark load too.
+A Delta ``MERGE INTO`` drop-in is the multi-writer upgrade path.
 
 Semantics preserved exactly:
 
@@ -29,8 +34,10 @@ import tempfile
 from dataclasses import asdict, dataclass
 from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from .arrowio import read_rows, write_rows
 
 EPOCH_DATE = date(1900, 1, 1)  # IC:62 default
 
@@ -54,8 +61,6 @@ STATE_SCHEMA = T.StructType(
         T.StructField("active", T.BooleanType()),
     ]
 )
-
-_FIELDS = [f.name for f in STATE_SCHEMA.fields]
 
 
 def tsql_int_div(a: int, b: int) -> int:
@@ -85,7 +90,6 @@ class StateRow:
 
 class StateStore:
     def __init__(self, spark: SparkSession, path: str | None = None):
-        self.spark = spark
         self.path = path
         self.rows: dict[tuple[str, str, str], StateRow] = {}
         self._next_id = 1
@@ -96,14 +100,17 @@ class StateStore:
         return (db, schema, obj)
 
     def _load(self) -> None:
-        if not self.path or not os.path.exists(self.path):
+        if not self.path:
+            return
+        path = self.path if os.path.exists(self.path) else self.path + ".old"
+        if not os.path.exists(path):
             return
         try:
-            df = self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
+            rows = read_rows(path, STATE_SCHEMA)
         except Exception:
             return
-        for r in df.collect():
-            row = StateRow(**{f: r[f] for f in _FIELDS})
+        for r in rows:
+            row = StateRow(**r)
             self.rows[self._key(row.database_name, row.schema, row.object_name)] = row
             self._next_id = max(self._next_id, row.id + 1)
 
@@ -112,23 +119,21 @@ class StateStore:
         writer; SURVEY §7.4 risk 1)."""
         if not self.path:
             return
+        old = self.path + ".old"
         tmp = tempfile.mkdtemp(dir=os.path.dirname(self.path) or ".", prefix=".state_tmp_")
         try:
-            self.df().coalesce(1).write.mode("overwrite").parquet(tmp)
-            old = self.path + ".old"
+            write_rows(
+                [asdict(r) for r in self.rows.values()], STATE_SCHEMA,
+                os.path.join(tmp, "part-00000.parquet"),
+            )
             if os.path.exists(self.path):
+                shutil.rmtree(old, ignore_errors=True)  # left by a crash after the swap
                 os.rename(self.path, old)
             os.rename(tmp, self.path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
         except Exception:
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(tmp, ignore_errors=True)
             raise
-
-    def df(self) -> DataFrame:
-        data = [tuple(asdict(r)[f] for f in _FIELDS) for r in self.rows.values()]
-        return self.spark.createDataFrame(data, STATE_SCHEMA)
+        shutil.rmtree(old, ignore_errors=True)
 
     # ------------------------------------------------------------------
     # MERGE (IC:454-484)

@@ -350,6 +350,12 @@ def _read_footer(path_size: tuple[str, int]) -> Row:
 DRIVER_SIDE_FOOTER_LIMIT = 64
 
 
+def probe_footers(files: list[FileMeta]) -> list[Row]:
+    """Footer stats of a small pinned file list, read on the driver
+    (``FOOTER_SCHEMA`` rows, in file order)."""
+    return [_read_footer((f.path, f.size)) for f in files]
+
+
 def footer_stats_df(spark: SparkSession, files: list[FileMeta]) -> DataFrame:
     """Parquet footer stats for a pinned file list.
 
@@ -363,8 +369,7 @@ def footer_stats_df(spark: SparkSession, files: list[FileMeta]) -> DataFrame:
     """
     if not files:
         return spark.createDataFrame([], FOOTER_SCHEMA)
-    pairs = [(f.path, f.size) for f in files]
-    if len(pairs) <= DRIVER_SIDE_FOOTER_LIMIT:
+    if len(files) <= DRIVER_SIDE_FOOTER_LIMIT:
         from integritychecksforvldbs_spark.functions.planutil import (
             local_relation,
         )
@@ -373,7 +378,7 @@ def footer_stats_df(spark: SparkSession, files: list[FileMeta]) -> DataFrame:
         # Python-RDD route re-spins Python workers on every action
         return local_relation(
             spark,
-            [tuple(r) for r in (_read_footer(p) for p in pairs)],
+            [tuple(r) for r in probe_footers(files)],
             [
                 ("path", "STRING"),
                 ("size", "BIGINT"),
@@ -384,6 +389,7 @@ def footer_stats_df(spark: SparkSession, files: list[FileMeta]) -> DataFrame:
                 ("error", "STRING"),
             ],
         )
+    pairs = [(f.path, f.size) for f in files]
     slices = min(len(pairs), spark.sparkContext.defaultParallelism * 2)
     rows = spark.sparkContext.parallelize(pairs, slices).map(_read_footer)
     return spark.createDataFrame(rows, FOOTER_SCHEMA)

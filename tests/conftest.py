@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -32,6 +33,38 @@ def _shard_files(tests_dir: str, n: int) -> list[list[str]]:
     return [s for s in shards if s]
 
 
+_SECTION = re.compile(r"^=+ (.+?) =+$")
+_SUMMARY = re.compile(r"^=*\s*(\d+ \w+.*|no tests ran.*) in [\d.]+s\b")
+_KEPT_SECTIONS = ("FAILURES", "ERRORS", "short test summary info")
+
+
+def _shard_report(text: str) -> tuple[str, dict[str, int]]:
+    """What to print of one shard's pytest output, and its counts.
+
+    Keeps the FAILURES and ERRORS sections (tracebacks, Hypothesis
+    reproduce blobs) and the short test summary, then the final summary
+    line, which alone supplies the counts.  A shard that died before
+    printing a summary is shown by its last 2,000 characters.
+    """
+    lines = text.splitlines()
+    end = next((i for i in reversed(range(len(lines))) if _SUMMARY.match(lines[i])), None)
+    if end is None:
+        return text[-2000:], {}
+    kept, keep = [], False
+    for line in lines[:end]:
+        m = _SECTION.match(line)
+        if m:
+            keep = m.group(1) in _KEPT_SECTIONS
+        if keep:
+            kept.append(line)
+    kept.append(lines[end])
+    counts: dict[str, int] = {}
+    for n, word in re.findall(r"(\d+) (\w+)", lines[end]):
+        word = {"error": "errors", "warning": "warnings"}.get(word, word)
+        counts[word] = counts.get(word, 0) + int(n)
+    return "\n".join(kept), counts
+
+
 _WATCHDOG_LAUNCHER = """
 import os, sys, threading, time
 import pytest
@@ -60,7 +93,6 @@ def pytest_cmdline_main(config):
         # file- or test-scoped invocations run normally
         if not paths or any(p != tests_dir for p in paths):
             return None
-        import re
         import subprocess
         import tempfile
         import time
@@ -108,37 +140,18 @@ def pytest_cmdline_main(config):
                         f"({time.time() - t0:.0f}s elapsed)",
                         flush=True,
                     )
-        passed = failed = skipped = errors = 0
+        totals = {"passed": 0, "failed": 0, "errors": 0, "skipped": 0}
         for i, _, out in procs:
             out.seek(0)
-            text = out.read()
+            report, counts = _shard_report(out.read())
             out.close()
-            tail = text[-2000:]
-            print(f"----- shard {i} tail -----\n{tail}", flush=True)
-            for pat, bump in (
-                (r"(\d+) passed", "passed"),
-                (r"(\d+) failed", "failed"),
-                (r"(\d+) skipped", "skipped"),
-                (r"(\d+) error", "errors"),
-            ):
-                m = re.search(pat, text)
-                if m:
-                    if bump == "passed":
-                        passed += int(m.group(1))
-                    elif bump == "failed":
-                        failed += int(m.group(1))
-                    elif bump == "skipped":
-                        skipped += int(m.group(1))
-                    else:
-                        errors += int(m.group(1))
+            print(f"----- shard {i} ({out.name}) -----\n{report}", flush=True)
+            for k in totals:
+                totals[k] += counts.get(k, 0)
         dt = time.time() - t0
-        bits = [f"{passed} passed"]
-        if failed:
-            bits.append(f"{failed} failed")
-        if errors:
-            bits.append(f"{errors} errors")
-        if skipped:
-            bits.append(f"{skipped} skipped")
+        bits = [f"{totals['passed']} passed"] + [
+            f"{totals[k]} {k}" for k in ("failed", "errors", "skipped") if totals[k]
+        ]
         print(f"{', '.join(bits)} in {dt:.2f}s", flush=True)
         return 0 if all(rc == 0 for rc in rcs.values()) else 1
     except Exception as e:  # any wrapper problem: run normally

@@ -285,6 +285,41 @@ def test_checkalloc_clean_and_corrupt(spark, tmp_path):
     assert not res.passed and any("zero-byte" in e for e in res.errors)
 
 
+@pytest.mark.parametrize("n_good,n_bad", [(3, 2), (0, 2), (60, 5), (0, 65)])
+def test_checkalloc_sums_match_sql_aggregate(spark, tmp_path, n_good, n_bad):
+    """The driver-side sums equal the SQL aggregate over the footer
+    rows on both sides of the 64-file probe limit, including SUM's NULL
+    when no footer is readable."""
+    from pyspark.sql import functions as F
+
+    from integritychecksforvldbs_spark.sources.catalog import footer_stats_df
+
+    files = []
+    for i in range(n_good):
+        p = tmp_path / f"part-{i:03d}.parquet"
+        shutil.copy(f"{SF_DIR}/region.parquet", p)
+        files.append(FileMeta(str(p), os.path.getsize(p)))
+    for i in range(n_bad):
+        p = tmp_path / f"bad-{i:03d}.parquet"
+        p.write_bytes(b"PAR1" if i % 2 else b"")
+        files.append(FileMeta(str(p), os.path.getsize(p)))
+    obj = ObjectMeta("tmp", "main", "t", "U", str(tmp_path), files)
+    res = run_checkalloc(spark, obj)
+    stats = footer_stats_df(spark, files)
+    want = stats.agg(
+        F.count("*").alias("n_files"),
+        F.sum(F.when(~F.col("footer_ok"), 1).otherwise(0)).alias("bad_files"),
+        F.sum(F.when(F.col("size") == 0, 1).otherwise(0)).alias("zero_byte_files"),
+        F.sum("footer_row_count").alias("footer_rows"),
+    ).collect()[0].asDict()
+    assert {k: res.metrics[k] for k in want} == want
+    bad = [r for r in stats.collect() if not r["footer_ok"]]
+    assert res.errors[: len(bad)] == [
+        f"unreadable footer: {r['path']}: {r['error']}" for r in bad
+    ]
+    assert not res.passed
+
+
 def test_checkalloc_missing_files(spark):
     obj = ObjectMeta("tmp", "main", "ghost", "U", "/nonexistent", [])
     assert not run_checkalloc(spark, obj).passed

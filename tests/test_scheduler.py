@@ -1,11 +1,19 @@
 """End-to-end scheduler scenarios (SURVEY §5.2 tests 1, 4, 5)."""
 
-from datetime import date
+import uuid
+from datetime import date, datetime, timedelta
 
 import pytest
 
+from integritychecksforvldbs_spark.operators.kernels import run_checkalloc
+from integritychecksforvldbs_spark.plans.runner import (
+    COMMAND_LOG_SCHEMA,
+    CommandLog,
+    last_good_check_df,
+)
 from integritychecksforvldbs_spark.plans.scheduler import CheckParams, IntegrityChecker
 from integritychecksforvldbs_spark.plans.state import StateStore
+from integritychecksforvldbs_spark.sources.catalog import list_objects
 
 BASE = "/root/testdata"
 N_TABLES = 10
@@ -599,3 +607,80 @@ def test_updateability_validation_and_discovery(spark, tmp_path):
     assert {o.spec.database for o in report.outcomes} == {"ro_db"}
     # parameter identity carries the gate (DIC:226)
     assert "@Updateability = 'READ_ONLY'" in checker._parameters_string()
+
+
+def _log_row(db: str, command_type: str, start: datetime, error_number: int) -> dict:
+    return {
+        "database_name": db, "command": "DBCC CHECKDB", "command_type": command_type,
+        "start_time": start, "end_time": start + timedelta(seconds=1),
+        "error_number": error_number,
+    }
+
+
+def test_log_with_spark_and_arrow_parts(spark, tmp_path):
+    """A log directory holding a part written by the earlier Spark
+    writer and a driver-written part reads as one table; new ids follow
+    the Spark part's, and last_good_check_df sees both parts."""
+    path = str(tmp_path / "log.parquet")
+    t0 = datetime(2026, 1, 1, 10, 0, 0)
+    old = [
+        _log_row("a", "DBCC_CHECKDB", t0, 0),
+        _log_row("b", "DBCC_CHECKDB", t0, 0),
+        _log_row("b", "DBCC_CHECKDB", t0 + timedelta(hours=2), 8900),
+    ]
+    data = [
+        tuple(i + 1 if f.name == "id" else r.get(f.name) for f in COMMAND_LOG_SCHEMA.fields)
+        for i, r in enumerate(old)
+    ]
+    spark.createDataFrame(data, COMMAND_LOG_SCHEMA).coalesce(1).write.parquet(path)
+    log = CommandLog(spark, path)
+    new = [
+        _log_row("a", "DBCC_CHECKDB", t0 + timedelta(hours=1), 0),
+        _log_row("c", "DBCC_CHECKTABLE", t0, 0),
+    ]
+    assert [log.append(r) for r in new] == [4, 5]
+    rows = log.df().collect()
+    assert sorted(r["id"] for r in rows) == [1, 2, 3, 4, 5]
+    assert sorted((r["database_name"], r["start_time"], r["error_number"]) for r in rows) == sorted(
+        (r["database_name"], r["start_time"], r["error_number"]) for r in old + new
+    )
+    lgc = {r["database_name"]: r["last_good_check"] for r in last_good_check_df(log.df()).collect()}
+    assert lgc == {"a": t0 + timedelta(hours=1), "b": t0}
+
+
+def test_command_log_ids_unique_across_runs(spark, tmp_path):
+    """Two invocations on one log path never reuse an id (CommandLog.ID
+    is an IDENTITY key, CL:7)."""
+    make(spark, tmp_path, execute="N").run()
+    make(spark, tmp_path, execute="N").run()
+    ids = [r["id"] for r in CommandLog(spark, str(tmp_path / "log.parquet")).df().collect()]
+    assert len(ids) > 2 + N_TABLES
+    assert sorted(ids) == list(range(1, len(ids) + 1))
+
+
+def test_metadata_io_starts_no_spark_jobs(spark, tmp_path):
+    """Ledger save and load, command-log flush and CHECKALLOC on a
+    table of at most 64 files are driver-side: no Spark job."""
+    sc = spark.sparkContext
+    obj = next(o for o in list_objects(spark, "sf0.001", f"{BASE}/sf0.001") if o.files)
+    listener_bus = sc._jsc.sc().listenerBus()
+    group = f"metadata-io-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "metadata I/O")
+    try:
+        st = StateStore(spark, str(tmp_path / "state.parquet"))
+        st.merge_inventory([("db", "main", "t", "U", 1)])
+        st.save()
+        assert list(StateStore(spark, str(tmp_path / "state.parquet")).rows) == [("db", "main", "t")]
+        log = CommandLog(spark, str(tmp_path / "log.parquet"))
+        log.append(_log_row("db", "DBCC_CHECKDB", datetime(2026, 1, 1), 0))
+        log.flush()
+        assert CommandLog(spark, str(tmp_path / "log.parquet"))._next_id == 2
+        assert run_checkalloc(spark, obj).passed
+        listener_bus.waitUntilEmpty(10_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the tracker does see this group's jobs
+        spark.range(3).count()
+        listener_bus.waitUntilEmpty(10_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")

@@ -1,9 +1,15 @@
 """State ledger MERGE + running-average semantics (IC:454-484, 696-722)."""
 
+import os
+import shutil
+from dataclasses import asdict
 from datetime import date, datetime, timedelta
+
+from pyspark.sql import functions as F
 
 from integritychecksforvldbs_spark.plans.state import (
     EPOCH_DATE,
+    STATE_SCHEMA,
     StateStore,
     tsql_int_div,
 )
@@ -122,3 +128,91 @@ def test_persistence_roundtrip(spark, tmp_path):
     assert r.used_page_count == 42 and r.run_duration_ms == 77
     assert r.last_check_date == date(2026, 1, 1)
     assert s2._next_id == 2
+
+
+def _epoch_us(t: datetime) -> int:
+    return (t - datetime(1970, 1, 1)) // timedelta(microseconds=1)
+
+
+def test_first_run_ledger_reads_in_spark_and_duckdb(spark, tmp_path):
+    """A first run's ledger holds NULL in every timestamp column; its
+    file still carries timestamp types, so Spark's declared-schema read
+    and DuckDB both accept it, and the store round-trips it."""
+    import duckdb
+
+    path = str(tmp_path / "state.parquet")
+    s = StateStore(spark, path)
+    s.merge_inventory([("db", "main", "a", "U", 1), ("db", "main", "b", "U", 2)])
+    t0 = datetime(2026, 1, 1, 10, 0, 0, 123456)
+    s.record_run("db", "main", "b", t0, t0 + timedelta(milliseconds=5), "C", date(2026, 1, 1))
+    s.save()
+    assert {k: asdict(r) for k, r in StateStore(spark, path).rows.items()} == {
+        k: asdict(r) for k, r in s.rows.items()
+    }
+    sdf = spark.read.schema(STATE_SCHEMA).parquet(path)
+    got = {
+        r["object_name"]: r
+        for r in sdf.select(
+            "object_name", "previous_run_date", "last_check_date",
+            F.unix_micros("start_time").alias("start_us"),
+        ).collect()
+    }
+    assert got["a"]["previous_run_date"] is None and got["a"]["start_us"] is None
+    assert got["a"]["last_check_date"] == EPOCH_DATE
+    assert got["b"]["start_us"] == _epoch_us(t0)
+    con = duckdb.connect()
+    rows = con.execute(
+        "SELECT object_name, previous_run_date, epoch_us(start_time), last_check_date "
+        f"FROM read_parquet('{path}/*.parquet') ORDER BY object_name"
+    ).fetchall()
+    con.close()
+    assert rows == [("a", None, None, EPOCH_DATE), ("b", None, _epoch_us(t0), date(2026, 1, 1))]
+
+
+def test_spark_written_ledger_still_loads(spark, tmp_path):
+    """Ledgers written by the earlier Spark writer (INT96 timestamps,
+    _SUCCESS and .crc side files) load unchanged."""
+    src = StateStore(spark, None)
+    src.merge_inventory([("db", "main", "t", "U", 42), ("db", "main", "u", "U", 7)])
+    t0 = datetime(2026, 1, 1, 10, 0, 0, 5)
+    src.record_run("db", "main", "t", t0, t0 + timedelta(milliseconds=77), "C", date(2026, 1, 1))
+    src.record_run("db", "main", "t", t0, t0 + timedelta(milliseconds=9), "C", date(2026, 1, 2))
+    path = str(tmp_path / "state.parquet")
+    data = [tuple(asdict(r).values()) for r in src.rows.values()]
+    spark.createDataFrame(data, STATE_SCHEMA).coalesce(1).write.parquet(path)
+    s = StateStore(spark, path)
+    assert {k: asdict(r) for k, r in s.rows.items()} == {
+        k: asdict(r) for k, r in src.rows.items()
+    }
+    assert s._next_id == 3
+
+
+def test_load_falls_back_to_old_after_crash_between_renames(spark, tmp_path):
+    """save() renames path -> path.old, then the new ledger -> path; a
+    crash between the two must not lose the check history."""
+    path = str(tmp_path / "state.parquet")
+    s = StateStore(spark, path)
+    s.merge_inventory([("db", "main", "t", "U", 42)])
+    t0 = datetime(2026, 1, 1, 10, 0, 0)
+    s.record_run("db", "main", "t", t0, t0 + timedelta(milliseconds=77), "C", date(2026, 1, 1))
+    s.save()
+    os.rename(path, path + ".old")  # the crash window
+    s2 = StateStore(spark, path)
+    assert s2.rows[("db", "main", "t")].last_check_date == date(2026, 1, 1)
+    s2.save()
+    assert not os.path.exists(path + ".old")
+    assert StateStore(spark, path).rows[("db", "main", "t")].number_of_executions == 1
+
+
+def test_save_after_crash_left_old_beside_path(spark, tmp_path):
+    """A crash after the swap but before the cleanup leaves path.old
+    beside path; the next save replaces it instead of failing."""
+    path = str(tmp_path / "state.parquet")
+    s = StateStore(spark, path)
+    s.merge_inventory([("db", "main", "t", "U", 1)])
+    s.save()
+    shutil.copytree(path, path + ".old")
+    s.merge_inventory([("db", "main", "t", "U", 2)])
+    s.save()
+    assert not os.path.exists(path + ".old")
+    assert StateStore(spark, path).rows[("db", "main", "t")].used_page_count == 2
