@@ -36,10 +36,10 @@ from integritychecksforvldbs_spark.streaming import freshness, joins, sessions
 # (events fixture spans 2024-01-01 .. 2024-01-30)
 FRESHNESS_AS_OF = "2024-02-01 00:00:00"
 from integritychecksforvldbs_spark.operators.kernels import (
-    checktable_df,
     checktable_oracle_sql,
-    fk_orphan_counts_df,
+    checktable_sql,
     run_checkdb,
+    sql_frame,
 )
 from integritychecksforvldbs_spark.sources.catalog import (
     FileMeta,
@@ -128,7 +128,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _checktable_query(table: str) -> Callable[[SparkSession, str], DataFrame]:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return checktable_df(_load(spark, sf_dir, table), expectations_for(table))
+        return sql_frame(
+            spark, checktable_sql(expectations_for(table)), {table: _load(spark, sf_dir, table)}
+        )
 
     return q
 
@@ -2396,17 +2398,14 @@ def _q_tokens_bpe_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from integritychecksforvldbs_spark.operators.kernels import (
         BROADCAST_THRESHOLD_BYTES,
-        fk_orphan_counts_union_sql,
     )
 
     # load only the tables the FK graph touches (children + parents):
     # every load_table call is driver work the timed run pays for
-    needed: set[str] = set()
-    for t in TABLES:
-        exp = expectations_for(t)
-        if exp.foreign_keys:
-            needed.add(t)
-            needed.update(fk.parent_table for fk in exp.foreign_keys)
+    exps = [e for e in map(expectations_for, TABLES) if e.foreign_keys]
+    needed = {e.table for e in exps} | {
+        fk.parent_table for e in exps for fk in e.foreign_keys
+    }
     tables = {t: _load(spark, sf_dir, t) for t in TABLES if t in needed}
     # pin the broadcast hint only for parents the catalog proves small;
     # catalog sizing sums part-files, so directory-backed tables work too
@@ -2414,13 +2413,21 @@ def _q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = {
         t for t in TABLES if sizes.get(t, BROADCAST_THRESHOLD_BYTES) < BROADCAST_THRESHOLD_BYTES
     }
-    # ONE parsed-SQL union over every FK spec: a single parse + analysis
-    # pass instead of per-child DataFrame chains + unionByName re-analysis
-    # (r14: construction was ~54% of this query's wall time)
-    exps = [expectations_for(t) for t in TABLES]
-    return fk_orphan_counts_union_sql(
-        spark, tables, [e for e in exps if e.foreign_keys], broadcast_parents=small
-    )
+    # ONE parsed-SQL union of every child's FK-only CHECKTABLE text,
+    # unpivoted to one row per FK: a single parse + analysis pass
+    # (r14: DataFrame-chain construction was ~54% of this query's time)
+    arms = []
+    for exp in exps:
+        rows = ", ".join(
+            f"named_struct('child_table', '{exp.table}', "
+            f"'fk_columns', '{'_'.join(fk.columns)}', "
+            f"'parent_table', '{fk.parent_table}', "
+            f"'orphan_rows', orphans_{'_'.join(fk.columns)})"
+            for fk in exp.foreign_keys
+        )
+        text = checktable_sql(exp, counters=False, broadcast_parents=small)
+        arms.append(f"SELECT inline(array({rows})) FROM ({text})")
+    return sql_frame(spark, "\nUNION ALL\n".join(arms), tables)
 
 
 def _fk_oracle() -> str:
@@ -3415,31 +3422,26 @@ def _q_checktable_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     (table_name, check_name, value): each table keeps its one-pass
     fused agg; ``stack`` unpivots the one-row result row-locally.
 
-    r14: the whole union is ONE parsed SQL text — the per-table
-    ``checktable_df`` chains (one F.expr py4j round trip per counter,
-    ~180 across the namespace, plus a re-analysis per unionByName)
-    measured 0.87 s of driver construction at steady state, ~44% of
-    the query; every aggregate expression already IS the SQL string
-    the expectations compiler emits, so one ``spark.sql`` call builds
-    the identical plan in a single parse + analysis pass."""
+    The whole union is ONE parsed SQL text of the per-table
+    CHECKTABLE renders: a single parse + analysis pass (r14: per-table
+    DataFrame chains measured 0.87 s of driver construction at steady
+    state, ~44% of the query)."""
     from integritychecksforvldbs_spark.operators.kernels import (
         checktable_agg_exprs,
     )
 
     arms: list[str] = []
-    refs: dict[str, DataFrame] = {}
     for t in TABLES:
-        exp = expectations_for(t)
-        exprs = checktable_agg_exprs(exp)
-        agg = ", ".join(f"{sql} AS {a}" for a, sql in exprs)
+        exprs = checktable_agg_exprs(expectations_for(t))
         stack = ", ".join(f"'{a}', {a}" for a, _ in exprs)
-        refs[f"t_{t}"] = _load(spark, sf_dir, t)
         arms.append(
             f"SELECT '{t}' AS table_name, "
             f"stack({len(exprs)}, {stack}) AS (check_name, value) "
-            f"FROM (SELECT {agg} FROM {{t_{t}}})"
+            f"FROM ({checktable_sql(expectations_for(t))})"
         )
-    return spark.sql("\nUNION ALL\n".join(arms), **refs)
+    return sql_frame(
+        spark, "\nUNION ALL\n".join(arms), {t: _load(spark, sf_dir, t) for t in TABLES}
+    )
 
 
 def _checktable_all_oracle() -> str:

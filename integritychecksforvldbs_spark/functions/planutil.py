@@ -8,11 +8,51 @@ re-execution, and Catalyst pays optimization time proportional to the
 accumulated plan (round-4 audit: the funnel's returned frame compiled
 to a 12,848-scan plan).  The fix is to truncate lineage at stage
 boundaries so the frame's plan is stage-local.
+
+:func:`scoped_conf` is the one way session settings change for a
+block of work.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
+
+# session settings are global to the session, not to a thread
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the block, then put back what
+    was there on entry.
+
+    A key that had a value, including one the session was built with,
+    is restored with ``set(previous)``, never ``unset``: an unset key
+    falls back to Spark's built-in default (200 shuffle partitions),
+    not the builder's value.  Only a key that was unset is unset again.
+    Scopes are serialized across threads, so a kernel thread that
+    outlives its lock timeout restores before the next command reads
+    the "previous" values.
+    """
+    if not conf:
+        yield
+        return
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def truncate_lineage(df: DataFrame, rebalance: bool = False) -> DataFrame:

@@ -3,12 +3,20 @@
 The reference delegates these to SQL Server's ``DBCC`` engine; here
 each kernel is a distributed Spark validation query:
 
-- **CHECKTABLE** — ONE wide single-pass aggregation per table fusing
-  row count, PK null/duplicate detection, NOT-NULL counters, and every
-  DATA_PURITY domain rule (IC:684-687 runs one pass per table; so do
-  we).  The aggregation is compiled from :mod:`..expectations` into
-  ANSI-SQL expressions that are valid in both Spark SQL and DuckDB, so
-  the exact same check list is the correctness oracle.
+- **CHECKTABLE** — one SQL text and one ``collect`` per command, as
+  the reference generates one ``DBCC CHECKTABLE`` string per object
+  (IC:684-687).  The text fuses row count, PK null/duplicate
+  detection, NOT-NULL counters, every DATA_PURITY domain rule and the
+  vector-length envelope into one wide aggregation.  It is rendered
+  by :func:`checktable_sql` from :mod:`..expectations` in a Spark or a
+  DuckDB dialect, so the exact same check list is the correctness
+  oracle.
+- **EXTENDED_LOGICAL_CHECKS** — FK-orphan counts.  Like the
+  reference's ``WITH EXTENDED_LOGICAL_CHECKS`` option (DIC:1639-1652)
+  they ride in the same CHECKTABLE text: the child streams through
+  broadcast left joins against the deduplicated keys of every
+  broadcast-small parent; a parent that is not gets its own LEFT ANTI
+  arm.  :func:`run_extended_logical` runs the FK counts alone.
 - **CHECKALLOC** — file-level allocation integrity from parquet
   footers: every pinned file exists, parses, is non-empty; footer row
   counts sum consistently (IC:547-548 analogue). Up to 64 files are
@@ -19,10 +27,16 @@ each kernel is a distributed Spark validation query:
   files, schema is readable, footer schemas agree across files, and
   (when a declared schema is registered) declared == stored
   (IC:554-555 analogue).
-- **EXTENDED_LOGICAL_CHECKS** — FK-orphan probes via left-anti joins
-  with small parents broadcast (DIC:1361 analogue).
 - **CHECKDB** — composition of the above over a whole namespace
   (DIC:1352-1365).
+
+A command is planned for its size, from the byte counts the catalog
+already holds (:func:`_plan_conf`): below ``BROADCAST_THRESHOLD_BYTES``
+(child plus FK parents) it runs with AQE off and a shuffle partition
+count sized to the advisory partition size, so it costs one Spark job
+plus one per broadcast parent.  At that size a check is almost all
+per-job overhead, and AQE would reach the same partition count only
+after the shuffle, paying for it in extra jobs.
 
 Everything stays JVM-side (built-in functions only — no Python UDFs),
 so WholeStageCodegen covers the scan→agg pipeline and predicate
@@ -32,13 +46,16 @@ pushdown/column pruning reach the parquet reader.
 from __future__ import annotations
 
 import functools
+import re
+from collections.abc import Collection
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..expectations import TableExpectations, expectations_for
+from ..expectations import ForeignKey, TableExpectations, expectations_for
+from ..functions.planutil import scoped_conf
 from ..sources.catalog import (
     DRIVER_SIDE_FOOTER_LIMIT,
     FileMeta,
@@ -107,26 +124,98 @@ def checktable_agg_exprs(
     return exprs
 
 
-def checktable_df(
-    df: DataFrame, exp: TableExpectations, physical_only: bool = False
-) -> DataFrame:
-    """The one-pass CHECKTABLE aggregation as a one-row DataFrame."""
-    exprs = checktable_agg_exprs(exp, physical_only, dialect="spark")
-    return df.agg(*[F.expr(sql).alias(alias) for alias, sql in exprs])
+def _orphans_alias(fk: ForeignKey) -> str:
+    return "orphans_" + "_".join(fk.columns)
+
+
+def checktable_sql(
+    exp: TableExpectations,
+    dialect: str = "spark",
+    physical_only: bool = False,
+    counters: bool = True,
+    envelope: bool = False,
+    broadcast_parents: Collection[str] | None = None,
+) -> str:
+    """One CHECKTABLE command as one SQL text with a one-row result.
+
+    Columns: the :func:`checktable_agg_exprs` counters (``counters``),
+    ``vector_len_min``/``vector_len_max`` over the ``embedding`` column
+    (``envelope``), and, unless ``broadcast_parents`` is None, one
+    ``orphans_<cols>`` count per FK.  A FK whose parent is in
+    ``broadcast_parents`` joins the one scan of the child: a
+    BROADCAST-hinted left join against the parent's keys, deduplicated
+    on one partition whenever the join could fan out another column
+    (counters, or a second FK), so every count sees each child row
+    once.  Any other FK gets its own LEFT ANTI arm, cross-joined on as
+    a one-row aggregate.  A child row is an orphan only when all its
+    key columns are non-NULL and the tuple has no parent.
+
+    Tables are named ``{t_<name>}`` in the Spark dialect (bind them
+    with :func:`sql_frame`) and by bare name in DuckDB.
+    """
+    def ref(t: str) -> str:
+        return "{t_" + t + "}" if dialect == "spark" else t
+
+    fks = [] if broadcast_parents is None else exp.foreign_keys
+    fused = [(i, fk) for i, fk in enumerate(fks) if fk.parent_table in broadcast_parents]
+    cols = []
+    if counters:
+        cols += [f"{sql} AS {a}" for a, sql in checktable_agg_exprs(exp, physical_only, dialect)]
+    if envelope:
+        size = "size" if dialect == "spark" else "len"
+        cols += [f"MIN({size}(embedding)) AS vector_len_min",
+                 f"MAX({size}(embedding)) AS vector_len_max"]
+    joins = []
+    for i, fk in fused:
+        proj = ", ".join(f"{p} AS _p{i}_{j}" for j, p in enumerate(fk.parent_columns))
+        if counters or len(fused) > 1:
+            side = (f"(SELECT DISTINCT * FROM "
+                    f"(SELECT /*+ COALESCE(1) */ {proj} FROM {ref(fk.parent_table)}))")
+        else:
+            side = f"(SELECT {proj} FROM {ref(fk.parent_table)})"
+        on = " AND ".join(f"c.{c} = p{i}._p{i}_{j}" for j, c in enumerate(fk.columns))
+        joins.append(f"\nLEFT JOIN {side} p{i} ON {on}")
+        nn = " AND ".join(f"c.{c} IS NOT NULL" for c in fk.columns)
+        cols.append(f"CAST(SUM(CASE WHEN {nn} AND p{i}._p{i}_0 IS NULL "
+                    f"THEN 1 ELSE 0 END) AS BIGINT) AS {_orphans_alias(fk)}")
+    arms = []
+    if cols:
+        hint = ", ".join(f"BROADCAST(p{i})" for i, _ in fused)
+        arms.append(f"SELECT {f'/*+ {hint} */ ' if hint else ''}{', '.join(cols)}\n"
+                    f"FROM {ref(exp.table)} c{''.join(joins)}")
+    anti = "LEFT ANTI JOIN" if dialect == "spark" else "ANTI JOIN"
+    for fk in fks:
+        if fk.parent_table in broadcast_parents:
+            continue
+        nn = " AND ".join(f"{c} IS NOT NULL" for c in fk.columns)
+        on = " AND ".join(f"c.{c} = p.{p}" for c, p in zip(fk.columns, fk.parent_columns))
+        arms.append(
+            f"SELECT CAST(COUNT(*) AS BIGINT) AS {_orphans_alias(fk)}\n"
+            f"FROM (SELECT {', '.join(fk.columns)} FROM {ref(exp.table)} WHERE {nn}) c\n"
+            f"{anti} {ref(fk.parent_table)} p ON {on}"
+        )
+    if len(arms) == 1:
+        return arms[0]
+    return "SELECT * FROM " + "\nCROSS JOIN ".join(
+        f"({a}) a{k}" for k, a in enumerate(arms)
+    )
+
+
+def sql_frame(spark: SparkSession, text: str, tables: dict[str, DataFrame]) -> DataFrame:
+    """Spark-dialect renderer text as a DataFrame, each ``{t_<name>}``
+    bound to ``tables[name]`` (one parse and one analysis pass)."""
+    return spark.sql(text, **{f"t_{t}": df for t, df in tables.items()})
 
 
 def checktable_oracle_sql(
     table: str, exp: TableExpectations | None = None, physical_only: bool = False
 ) -> str:
-    """The identical aggregation in DuckDB SQL for the oracle."""
-    exp = exp or expectations_for(table)
-    exprs = checktable_agg_exprs(exp, physical_only, dialect="duckdb")
-    cols = ",\n  ".join(f"{sql} AS {alias}" for alias, sql in exprs)
-    return f"SELECT\n  {cols}\nFROM {table}"
+    """The CHECKTABLE counters in DuckDB SQL for the oracle."""
+    return checktable_sql(exp or expectations_for(table), "duckdb", physical_only)
 
 
 # ---------------------------------------------------------------------------
-# Kernel results
+# Kernel results and the command planner
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -146,6 +235,89 @@ class KernelResult:
 _NON_VIOLATION_METRICS = {"n_rows", "vector_len_min", "vector_len_max"}
 
 
+def _plan_conf(spark: SparkSession, nbytes: int | None) -> dict[str, str]:
+    """The settings one command runs under, from its catalog byte count.
+
+    Below ``BROADCAST_THRESHOLD_BYTES``: AQE off, and
+    ``ceil(nbytes / advisoryPartitionSizeInBytes)`` shuffle partitions
+    clamped to [1, the session's value] — the size AQE would coalesce
+    to only after the shuffle, in extra jobs.  Unknown or larger
+    commands keep the session's settings.
+    """
+    if nbytes is None or nbytes >= BROADCAST_THRESHOLD_BYTES:
+        return {}
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = min(max(1, -(-nbytes // advisory)), cap)
+    return {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(n)}
+
+
+def _collect_row(
+    spark: SparkSession, text: str, tables: dict[str, DataFrame], nbytes: int | None = None
+) -> dict[str, Any]:
+    """Run one rendered command under its planned settings; its one row."""
+    df = sql_frame(spark, text, tables)
+    with scoped_conf(spark, _plan_conf(spark, nbytes)):
+        return df.collect()[0].asDict()
+
+
+def _counter_errors(row: dict[str, Any]) -> list[str]:
+    """Nonzero violation counters, then a broken vector-length envelope."""
+    errors = [
+        f"{k} = {v}"
+        for k, v in row.items()
+        if k not in _NON_VIOLATION_METRICS and not k.startswith("orphans_")
+        and v not in (0, None)
+    ]
+    lo, hi = row.get("vector_len_min"), row.get("vector_len_max")
+    if "vector_len_min" in row and (lo != hi or (lo is not None and lo <= 0)):
+        errors.append(f"inconsistent vector length [{lo}, {hi}]")
+    return errors
+
+
+def _fk_errors(row: dict[str, Any], exp: TableExpectations) -> list[str]:
+    return [
+        f"FK {exp.table}({'_'.join(fk.columns)}) → {fk.parent_table}: "
+        f"{row[_orphans_alias(fk)]} orphan row(s)"
+        for fk in exp.foreign_keys
+        if row[_orphans_alias(fk)]
+    ]
+
+
+def _checktable_command(
+    spark: SparkSession,
+    df: DataFrame,
+    table: str,
+    exp: TableExpectations,
+    physical_only: bool,
+    parents: dict[str, DataFrame] | None,
+    sizes: dict[str, int] | None,
+) -> tuple[dict[str, Any], list[str], list[str]]:
+    """One CHECKTABLE command: (row, counter errors, FK errors)."""
+    sizes = sizes or {}
+    fks = parents is not None and bool(exp.foreign_keys) and not physical_only
+    small = None
+    names = {table}
+    if fks:
+        names |= {fk.parent_table for fk in exp.foreign_keys}
+        small = {t for t in names if sizes.get(t, BROADCAST_THRESHOLD_BYTES)
+                 < BROADCAST_THRESHOLD_BYTES}
+    text = checktable_sql(
+        exp, "spark", physical_only,
+        envelope=not physical_only and "embedding" in df.columns,
+        broadcast_parents=small,
+    )
+    nbytes = sum(sizes[t] for t in names) if names <= sizes.keys() else None
+    row = _collect_row(spark, text, {**(parents or {}), table: df}, nbytes)
+    errors = _counter_errors(row)
+    if not fks:
+        return row, errors, []
+    row["n_fks"] = len(exp.foreign_keys)
+    return row, errors, _fk_errors(row, exp)
+
+
 def run_checktable(
     spark: SparkSession,
     df: DataFrame,
@@ -153,29 +325,22 @@ def run_checktable(
     table: str,
     exp: TableExpectations | None = None,
     physical_only: bool = False,
+    parents: dict[str, DataFrame] | None = None,
+    sizes: dict[str, int] | None = None,
 ) -> KernelResult:
-    """Execute CHECKTABLE; pass iff every violation counter is zero."""
+    """Execute CHECKTABLE; pass iff every violation counter is zero.
+
+    ``parents`` (frames by table name, holding every FK parent) adds
+    the EXTENDED_LOGICAL orphan counts to the same plan, with
+    ``orphans_<cols>`` and ``n_fks`` metrics.  ``sizes`` (catalog bytes
+    by table name) picks the broadcast-small parents and plans the
+    command (:func:`_plan_conf`); a table without a size counts as large.
+    """
     exp = exp or expectations_for(table)
-    row = checktable_df(df, exp, physical_only).collect()[0].asDict()
-    errors = [
-        f"{k} = {v}"
-        for k, v in row.items()
-        if k not in _NON_VIOLATION_METRICS and v not in (0, None)
-    ]
-    # embeddings-style table-level invariant: one consistent vector length
-    if not physical_only and "embedding" in df.columns:
-        lens = df.agg(
-            F.min(F.size("embedding")).alias("vector_len_min"),
-            F.max(F.size("embedding")).alias("vector_len_max"),
-        ).collect()[0]
-        row["vector_len_min"] = lens["vector_len_min"]
-        row["vector_len_max"] = lens["vector_len_max"]
-        if lens["vector_len_min"] != lens["vector_len_max"] or (
-            lens["vector_len_min"] is not None and lens["vector_len_min"] <= 0
-        ):
-            errors.append(
-                f"inconsistent vector length [{lens['vector_len_min']}, {lens['vector_len_max']}]"
-            )
+    row, errors, fk_errors = _checktable_command(
+        spark, df, table, exp, physical_only, parents, sizes
+    )
+    errors += fk_errors
     return KernelResult("CHECKTABLE", database, table, not errors, row, errors)
 
 
@@ -272,257 +437,6 @@ def run_checkcatalog(
     )
 
 
-def fk_orphan_counts_df(
-    tables: dict[str, DataFrame],
-    exp: TableExpectations,
-    broadcast_parents: set[str] | None = None,
-) -> DataFrame:
-    """EXTENDED_LOGICAL_CHECKS tier: one row per FK with its orphan
-    count (child rows whose key has no parent), via left-anti joins.
-
-    Join strategy is left to Catalyst/AQE by default: parquet-backed
-    parents under ``spark.sql.autoBroadcastJoinThreshold`` become
-    broadcast-hash anti-joins (fact side streams, no shuffle); larger
-    parents fall back to shuffle joins — forcing a broadcast of, say,
-    the orders table at 100 TB would OOM every executor.  Callers
-    that KNOW a parent is dimension-sized can name it in
-    ``broadcast_parents`` to pin the hint.
-
-    When EVERY parent of the child is broadcast-able, the probes fuse
-    into ONE scan of the child — N broadcast left-joins feeding a
-    single wide aggregation (a fact table with 3 FKs is read once,
-    not 3×); otherwise each FK falls back to its own anti-join.
-    """
-    spark = tables[exp.table].sparkSession
-    broadcast_parents = broadcast_parents or set()
-    child = tables[exp.table]
-    if exp.foreign_keys and all(
-        fk.parent_table in broadcast_parents for fk in exp.foreign_keys
-    ):
-        return _fk_orphan_counts_fused(tables, exp)
-    out: DataFrame | None = None
-    for fk in exp.foreign_keys:
-        parent = tables[fk.parent_table]
-        if fk.parent_table in broadcast_parents:
-            parent = F.broadcast(parent)
-        cond = [
-            child[c] == parent[p] for c, p in zip(fk.columns, fk.parent_columns)
-        ]
-        nn = child
-        for c in fk.columns:
-            nn = nn.filter(F.col(c).isNotNull())
-        orphans = nn.join(parent, cond, "left_anti")
-        one = orphans.agg(F.count("*").cast("long").alias("orphan_rows")).select(
-            F.lit(exp.table).alias("child_table"),
-            F.lit("_".join(fk.columns)).alias("fk_columns"),
-            F.lit(fk.parent_table).alias("parent_table"),
-            "orphan_rows",
-        )
-        out = one if out is None else out.unionByName(one)
-    if out is None:
-        from pyspark.sql import types as T
-
-        out = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("child_table", T.StringType()),
-                    T.StructField("fk_columns", T.StringType()),
-                    T.StructField("parent_table", T.StringType()),
-                    T.StructField("orphan_rows", T.LongType()),
-                ]
-            ),
-        )
-    return out
-
-
-def fk_orphan_counts_union_sql(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    exps: list[TableExpectations],
-    broadcast_parents: set[str] | None = None,
-) -> DataFrame:
-    """Every child's FK orphan counts in ONE ``spark.sql`` call.
-
-    Semantically identical to unioning :func:`fk_orphan_counts_df`
-    over ``exps`` — same fused broadcast chain per all-small-parent
-    child (COALESCE'd single-partition parent dedup for multi-FK
-    children, BROADCAST-hinted left joins, one conditional-count
-    aggregation, ``inline``-unpivoted to the per-FK schema) and the
-    same per-FK LEFT ANTI fallback when any parent is too big to
-    broadcast.  The difference is pure construction cost: building
-    the N-child chain through the DataFrame API is ~150 py4j round
-    trips and one analyzer pass per ``join``/``unionByName`` (measured
-    0.63 s of the 1.2 s query at sf0.1, ~54%); one parsed SQL text is
-    a single parse + ONE analysis pass (guide §7.3 — plan
-    construction is serial driver time no executor can hide).
-    """
-    broadcast_parents = broadcast_parents or set()
-    arms: list[str] = []
-    refs: dict[str, DataFrame] = {}
-
-    def ref(t: str) -> str:
-        key = f"t_{t}"
-        refs[key] = tables[t]
-        return "{" + key + "}"
-
-    for exp in exps:
-        if not exp.foreign_keys:
-            continue
-        fused = all(
-            fk.parent_table in broadcast_parents for fk in exp.foreign_keys
-        )
-        if fused:
-            dedup = len(exp.foreign_keys) > 1
-            child_cols = sorted(
-                {c for fk in exp.foreign_keys for c in fk.columns}
-            )
-            joins, counters, structs, hints = [], [], [], []
-            for idx, fk in enumerate(exp.foreign_keys):
-                alias = f"p{idx}"
-                hints.append(f"BROADCAST({alias})")
-                proj = ", ".join(
-                    f"{p} AS _p{idx}_{i}"
-                    for i, p in enumerate(fk.parent_columns)
-                )
-                inner = f"SELECT /*+ COALESCE(1) */ {proj} FROM {ref(fk.parent_table)}"
-                side = (
-                    f"(SELECT DISTINCT * FROM ({inner}))"
-                    if dedup
-                    else f"(SELECT {proj} FROM {ref(fk.parent_table)})"
-                )
-                on = " AND ".join(
-                    f"c.{c} = {alias}._p{idx}_{i}"
-                    for i, c in enumerate(fk.columns)
-                )
-                joins.append(f"LEFT JOIN {side} {alias} ON {on}")
-                nn = " AND ".join(
-                    f"c.{c} IS NOT NULL" for c in fk.columns
-                )
-                counters.append(
-                    f"CAST(SUM(CASE WHEN {nn} AND {alias}._p{idx}_0 IS NULL "
-                    f"THEN 1 ELSE 0 END) AS BIGINT) AS _o{idx}"
-                )
-                structs.append(
-                    f"named_struct("
-                    f"'child_table', '{exp.table}', "
-                    f"'fk_columns', '{'_'.join(fk.columns)}', "
-                    f"'parent_table', '{fk.parent_table}', "
-                    f"'orphan_rows', _o{idx})"
-                )
-            child = (
-                f"(SELECT {', '.join(child_cols)} FROM {ref(exp.table)}) c"
-            )
-            agg = (
-                f"SELECT /*+ {', '.join(hints)} */ {', '.join(counters)} "
-                f"FROM {child} {' '.join(joins)}"
-            )
-            arms.append(
-                f"SELECT inline(array({', '.join(structs)})) FROM ({agg})"
-            )
-        else:
-            for fk in exp.foreign_keys:
-                nn = " AND ".join(
-                    f"{c} IS NOT NULL" for c in fk.columns
-                )
-                on = " AND ".join(
-                    f"c.{cc} = p.{pc}"
-                    for cc, pc in zip(fk.columns, fk.parent_columns)
-                )
-                hint = (
-                    "/*+ BROADCAST(p) */ "
-                    if fk.parent_table in broadcast_parents
-                    else ""
-                )
-                arms.append(
-                    f"SELECT {hint}"
-                    f"'{exp.table}' AS child_table, "
-                    f"'{'_'.join(fk.columns)}' AS fk_columns, "
-                    f"'{fk.parent_table}' AS parent_table, "
-                    f"CAST(COUNT(*) AS BIGINT) AS orphan_rows "
-                    f"FROM (SELECT {', '.join(fk.columns)} FROM {ref(exp.table)} "
-                    f"WHERE {nn}) c "
-                    f"LEFT ANTI JOIN {ref(fk.parent_table)} p ON {on}"
-                )
-    if not arms:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("child_table", T.StringType()),
-                    T.StructField("fk_columns", T.StringType()),
-                    T.StructField("parent_table", T.StringType()),
-                    T.StructField("orphan_rows", T.LongType()),
-                ]
-            ),
-        )
-    return spark.sql("\nUNION ALL\n".join(arms), **refs)
-
-
-def _fk_orphan_counts_fused(
-    tables: dict[str, DataFrame], exp: TableExpectations
-) -> DataFrame:
-    """All FK probes of one child in ONE pass: the child's key columns
-    stream through N broadcast left-joins against parent keys, orphan
-    flags are counted in a single aggregation, and the one-row result
-    unpivots to the per-FK output schema.  No shuffle touches child
-    data (partial aggregation map-side).
-
-    Parent keys are deduplicated ONLY for multi-FK children: a left
-    join counts an orphan (zero-match) row exactly once no matter how
-    duplicated the parent side is, so single-FK orphan counts are
-    exact as-is — but when joins chain, an earlier join's dup-key
-    fan-out would multiply a later FK's orphan rows."""
-    dedup_parents = len(exp.foreign_keys) > 1
-    child_cols = sorted({c for fk in exp.foreign_keys for c in fk.columns})
-    j = tables[exp.table].select(*child_cols)
-    for idx, fk in enumerate(exp.foreign_keys):
-        parent = tables[fk.parent_table].select(
-            *[
-                F.col(p).alias(f"_p{idx}_{i}")
-                for i, p in enumerate(fk.parent_columns)
-            ]
-        )
-        if dedup_parents:
-            # single-partition dedup: the fused path only fires for
-            # catalog-proven broadcast-small parents, so one task holds
-            # the keys comfortably and the distinct loses its
-            # partial→Exchange→final shuffle (one AQE stage round-trip
-            # per parent instead of three).
-            parent = parent.coalesce(1).dropDuplicates()
-        # name-based refs: the _p{idx}_{i} aliases are unique across the
-        # whole chain, so F.col never ambiguates — and unlike df[c]
-        # attribute refs it does not force a re-analysis of the growing
-        # join plan on every iteration (O(N^2) driver work for an
-        # N-join chain).
-        cond = [
-            F.col(c) == F.col(f"_p{idx}_{i}") for i, c in enumerate(fk.columns)
-        ]
-        j = j.join(F.broadcast(parent), cond, "left")
-    counters = []
-    for idx, fk in enumerate(exp.foreign_keys):
-        nn = F.expr(" AND ".join(f"{c} IS NOT NULL" for c in fk.columns))
-        miss = F.col(f"_p{idx}_0").isNull()
-        counters.append(
-            F.sum(F.when(nn & miss, 1).otherwise(0))
-            .cast("long")
-            .alias(f"_orphans_{idx}")
-        )
-    agg = j.agg(*counters)
-    structs = [
-        F.struct(
-            F.lit(exp.table).alias("child_table"),
-            F.lit("_".join(fk.columns)).alias("fk_columns"),
-            F.lit(fk.parent_table).alias("parent_table"),
-            F.col(f"_orphans_{idx}").alias("orphan_rows"),
-        )
-        for idx, fk in enumerate(exp.foreign_keys)
-    ]
-    return agg.select(F.explode(F.array(*structs)).alias("r")).select("r.*")
-
-
 def run_extended_logical(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -531,19 +445,20 @@ def run_extended_logical(
     exp: TableExpectations | None = None,
     broadcast_parents: set[str] | None = None,
 ) -> KernelResult:
+    """EXTENDED_LOGICAL_CHECKS alone: the FK orphan counts of
+    :func:`checktable_sql` without the CHECKTABLE counters, for when
+    CHECKTABLE itself runs elsewhere (the incremental path).  Parents
+    in ``broadcast_parents`` share one scan of the child; the rest get
+    LEFT ANTI arms whose join strategy Catalyst/AQE picks (forcing a
+    broadcast of a large parent would OOM every executor)."""
     exp = exp or expectations_for(table)
     if not exp.foreign_keys:
         return KernelResult("EXTENDED_LOGICAL", database, table, True, {"n_fks": 0})
-    rows = fk_orphan_counts_df(tables, exp, broadcast_parents).collect()
-    errors = [
-        f"FK {r['child_table']}({r['fk_columns']}) → {r['parent_table']}: "
-        f"{r['orphan_rows']} orphan row(s)"
-        for r in rows
-        if r["orphan_rows"]
-    ]
-    metrics = {f"orphans_{r['fk_columns']}": r["orphan_rows"] for r in rows}
-    metrics["n_fks"] = len(rows)
-    return KernelResult("EXTENDED_LOGICAL", database, table, not errors, metrics, errors)
+    text = checktable_sql(exp, counters=False, broadcast_parents=broadcast_parents or set())
+    row = _collect_row(spark, text, tables)
+    errors = _fk_errors(row, exp)
+    row["n_fks"] = len(exp.foreign_keys)
+    return KernelResult("EXTENDED_LOGICAL", database, table, not errors, row, errors)
 
 
 def run_checkfilegroup(
@@ -569,7 +484,8 @@ def run_checkfilegroup(
     if not physical_only and files and not errors:
         df = load_table(spark, *[f.path for f in files])
         tbl = run_checktable(
-            spark, df, database, obj.object_name, expectations_for(obj.object_name)
+            spark, df, database, obj.object_name, expectations_for(obj.object_name),
+            sizes={obj.object_name: sub.total_bytes},
         )
         metrics.update(tbl.metrics)
         # cross-row uniqueness is a whole-table property — a filegroup
@@ -649,30 +565,31 @@ def run_checkdb(
     for o in objs:
         results.append(run_checkalloc(spark, o, full=not physical_only))
     results.append(run_checkcatalog(spark, objs, declared_schemas))
-    tables: dict[str, DataFrame] = {}
-    if not physical_only:
-        # the catalog knows every table's on-disk size — pin the
-        # broadcast hint for provably small FK parents, let AQE decide
-        # for the rest (a forced broadcast of a large parent would OOM)
-        small = {
-            o.object_name for o in objs if o.total_bytes < BROADCAST_THRESHOLD_BYTES
-        }
-        for o in objs:
-            tables[o.object_name] = load_table(spark, *[f.path for f in o.files])
-        for o in objs:
-            exp = expectations_for(o.object_name)
-            results.append(
-                run_checktable(spark, tables[o.object_name], database, o.object_name, exp)
-            )
-            if extended_logical_checks and exp.foreign_keys and all(
-                fk.parent_table in tables for fk in exp.foreign_keys
-            ):
-                results.append(
-                    run_extended_logical(
-                        spark, tables, database, o.object_name, exp,
-                        broadcast_parents=small,
-                    )
-                )
+    if physical_only:
+        return results
+    tables = {o.object_name: load_table(spark, *[f.path for f in o.files]) for o in objs}
+    sizes = {o.object_name: o.total_bytes for o in objs}
+    for o in objs:
+        name = o.object_name
+        exp = expectations_for(name)
+        fks = extended_logical_checks and exp.foreign_keys and all(
+            fk.parent_table in tables for fk in exp.foreign_keys
+        )
+        # one plan per table; with FKs it reports as the two results
+        # CHECKDB lists, CHECKTABLE and EXTENDED_LOGICAL
+        row, errors, fk_errors = _checktable_command(
+            spark, tables[name], name, exp, False, tables if fks else None, sizes
+        )
+        fk_keys = {"n_fks", *(k for k in row if k.startswith("orphans_"))}
+        results.append(KernelResult(
+            "CHECKTABLE", database, name, not errors,
+            {k: v for k, v in row.items() if k not in fk_keys}, errors,
+        ))
+        if fks:
+            results.append(KernelResult(
+                "EXTENDED_LOGICAL", database, name, not fk_errors,
+                {k: v for k, v in row.items() if k in fk_keys}, fk_errors,
+            ))
     return results
 
 
@@ -985,7 +902,7 @@ def _row_rule_predicates(exp: TableExpectations) -> list[tuple[str, str]]:
 def checktable_violations_df(df: DataFrame, exp: TableExpectations) -> DataFrame:
     """The rows behind the counters: (key columns…, rule) for every
     rule a row violates — what a repair job consumes after
-    :func:`checktable_df` says *how many* are broken.
+    the CHECKTABLE counters say *how many* are broken.
 
     Row-local rules flag in the same single scan (an array of
     (rule, violated) structs, exploded and filtered, so output is
@@ -1357,21 +1274,7 @@ def run_checktable_incremental(
     finally:
         partials.unpersist()
 
-    errors = [
-        f"{k} = {v}"
-        for k, v in row.items()
-        if k not in _NON_VIOLATION_METRICS and v not in (0, None)
-    ]
-    if (
-        "vector_len_min" in row
-        and (
-            row["vector_len_min"] != row["vector_len_max"]
-            or (row["vector_len_min"] is not None and row["vector_len_min"] <= 0)
-        )
-    ):
-        errors.append(
-            f"inconsistent vector length [{row['vector_len_min']}, {row['vector_len_max']}]"
-        )
+    errors = _counter_errors(row)
     res = KernelResult(
         "CHECKTABLE", obj.database_name, obj.object_name, not errors, row, errors
     )

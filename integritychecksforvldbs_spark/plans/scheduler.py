@@ -714,47 +714,44 @@ class IntegrityChecker:
         physical_only: bool,
         extended: bool,
     ):
-        if obj.object_name not in tables_cache:
-            tables_cache[obj.object_name] = load_table(
-                self.spark, *[f.path for f in obj.files]
-            )
-        df = tables_cache[obj.object_name]
-        exp = expectations_for(obj.object_name)
-        if self.params.incremental_state_dir and not physical_only:
-            from ..operators.kernels import run_checktable_incremental
-
-            result = run_checktable_incremental(
-                self.spark,
-                obj,
-                f"{self.params.incremental_state_dir}/{dbname}",
-                exp,
-            )
-            result.database = dbname
-        else:
-            result = run_checktable(
-                self.spark, df, dbname, obj.object_name, exp, physical_only
-            )
-        if extended and exp.foreign_keys and not physical_only:
-            for fk in exp.foreign_keys:
-                if fk.parent_table not in tables_cache and fk.parent_table in by_name:
-                    po = by_name[fk.parent_table]
-                    tables_cache[fk.parent_table] = load_table(
-                        self.spark, *[f.path for f in po.files]
-                    )
-            if all(fk.parent_table in tables_cache for fk in exp.foreign_keys):
-                from ..operators.kernels import BROADCAST_THRESHOLD_BYTES
-
-                small = {
-                    name
-                    for name, o in by_name.items()
-                    if o.total_bytes < BROADCAST_THRESHOLD_BYTES
-                }
-                ext = run_extended_logical(
-                    self.spark, tables_cache, dbname, obj.object_name, exp,
-                    broadcast_parents=small,
+        def table(o: ObjectMeta):
+            if o.object_name not in tables_cache:
+                tables_cache[o.object_name] = load_table(
+                    self.spark, *[f.path for f in o.files]
                 )
-                result.metrics.update(ext.metrics)
-                if not ext.passed:
-                    result.passed = False
-                    result.errors.extend(ext.errors)
+            return tables_cache[o.object_name]
+
+        exp = expectations_for(obj.object_name)
+        parents = None
+        if extended and exp.foreign_keys and not physical_only and all(
+            fk.parent_table in by_name for fk in exp.foreign_keys
+        ):
+            parents = {
+                fk.parent_table: table(by_name[fk.parent_table]) for fk in exp.foreign_keys
+            }
+        sizes = {name: o.total_bytes for name, o in by_name.items()}
+        if physical_only or not self.params.incremental_state_dir:
+            # CHECKTABLE and its FK probes: one plan, one collect
+            return run_checktable(
+                self.spark, table(obj), dbname, obj.object_name, exp,
+                physical_only, parents=parents, sizes=sizes,
+            )
+        from ..operators.kernels import BROADCAST_THRESHOLD_BYTES, run_checktable_incremental
+
+        result = run_checktable_incremental(
+            self.spark, obj, f"{self.params.incremental_state_dir}/{dbname}", exp,
+        )
+        result.database = dbname
+        if parents is not None:
+            ext = run_extended_logical(
+                self.spark, {**parents, obj.object_name: table(obj)},
+                dbname, obj.object_name, exp,
+                broadcast_parents={
+                    t for t in parents if sizes[t] < BROADCAST_THRESHOLD_BYTES
+                },
+            )
+            result.metrics.update(ext.metrics)
+            if not ext.passed:
+                result.passed = False
+                result.errors.extend(ext.errors)
         return result

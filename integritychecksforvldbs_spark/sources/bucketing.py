@@ -18,6 +18,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.planutil import scoped_conf
+
 
 def write_bucketed(
     df: DataFrame,
@@ -169,11 +171,6 @@ def partition_backfill(
     ]
     if not parts:
         return []
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf, "static")
-    spark.conf.set(conf, "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(conf, prev)
     return sorted(parts)

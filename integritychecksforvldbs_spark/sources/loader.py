@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.planutil import scoped_conf
+
 
 def _file_key(path: str) -> tuple[str, int, int] | None:
     """Identity key for a SINGLE regular file: (path, mtime_ns, size).
@@ -132,9 +134,7 @@ def load_table(
         if schema is not None:
             return normalize_ntz(spark.read.schema(schema).parquet(*paths))
         return normalize_ntz(_read_parquet(spark, *paths))
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         df = _read_parquet(spark, *paths)
         for c in ns_cols:
             # a heterogeneous multi-path read can resolve to a schema
@@ -146,8 +146,6 @@ def load_table(
                 )
         # preserve original column order
         return normalize_ntz(df)
-    finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from integritychecksforvldbs_spark.functions.planutil import scoped_conf
 from integritychecksforvldbs_spark.sources.loader import load_table
 
 DEFAULT_TARGET_BYTES = 256 * 1024 * 1024
@@ -117,16 +118,11 @@ def write_stats_friendly(
     the standards-track encoding with full stats; scoped to this
     write, restored after.  ``partition_by``: hive-style
     ``col=value/`` layout."""
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key, "INT96")
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}):
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(dest)
-    finally:
-        spark.conf.set(key, prev)
 
 
 # ---------------------------------------------------------------------------

@@ -3,8 +3,15 @@ import re
 import sys
 
 import pytest
+from hypothesis import settings
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Property tests are a gate by default: the same examples on every run,
+# and a failure prints the blob that reproduces it.  Search for new
+# counterexamples with `pytest --hypothesis-profile explore`.
+settings.register_profile("default", derandomize=True, print_blob=True)
+settings.register_profile("explore", max_examples=1000, print_blob=True)
 
 
 # ---------------------------------------------------------------------------

@@ -42,9 +42,9 @@ def doc_dir(spark, tmp_path):
 
 def _full_row(spark, path):
     exp = expectations_for("documents")
-    return (
-        kernels.checktable_df(load_table(spark, path), exp).collect()[0].asDict()
-    )
+    return kernels.sql_frame(
+        spark, kernels.checktable_sql(exp), {"documents": load_table(spark, path)}
+    ).collect()[0].asDict()
 
 
 def test_incremental_equals_full(spark, doc_dir, tmp_path):

@@ -12,11 +12,12 @@ from pyspark.sql import functions as F
 
 from integritychecksforvldbs_spark.expectations import expectations_for
 from integritychecksforvldbs_spark.operators.kernels import (
-    checktable_df,
     checktable_oracle_sql,
+    checktable_sql,
     run_checkalloc,
     run_checkcatalog,
     run_checktable,
+    sql_frame,
 )
 from integritychecksforvldbs_spark.sources.catalog import FileMeta, ObjectMeta, list_objects
 from integritychecksforvldbs_spark.sources.loader import load_table
@@ -78,8 +79,9 @@ def test_checktable_oracle_agrees_on_corruption(spark, corrupt_orders):
     """The kernel and the DuckDB oracle must report the IDENTICAL
     violation counters on the corrupted variant — corruption is where
     oracle parity matters most."""
-    got = checktable_df(
-        spark.read.parquet(corrupt_orders), expectations_for("orders")
+    got = sql_frame(
+        spark, checktable_sql(expectations_for("orders")),
+        {"orders": spark.read.parquet(corrupt_orders)},
     ).collect()[0].asDict()
     con = duckdb.connect()
     files = [
@@ -152,10 +154,9 @@ def test_checkcatalog_detects_declared_mismatch(spark):
 def test_violations_rows_match_counters(spark, tables):
     """The violation-row extraction and the one-pass counters are two
     views of one rule list: per-rule row counts must equal the
-    checktable_df counters, and a healthy table yields no rows."""
+    CHECKTABLE counters, and a healthy table yields no rows."""
     from integritychecksforvldbs_spark.expectations import expectations_for
     from integritychecksforvldbs_spark.operators.kernels import (
-        checktable_df,
         checktable_violations_df,
     )
 
@@ -175,7 +176,7 @@ def test_violations_rows_match_counters(spark, tables):
         .alias("n_chars"),
     ).unionByName(docs.filter(F.col("doc_id") == 17))
 
-    counters = checktable_df(corrupted, exp).first().asDict()
+    counters = sql_frame(spark, checktable_sql(exp), {"documents": corrupted}).first().asDict()
     viol = {
         r["rule"]: r["n"]
         for r in checktable_violations_df(corrupted, exp)

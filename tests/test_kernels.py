@@ -3,17 +3,24 @@
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from integritychecksforvldbs_spark.expectations import expectations_for
+from integritychecksforvldbs_spark.expectations import (
+    ForeignKey,
+    TableExpectations,
+    expectations_for,
+)
 from integritychecksforvldbs_spark.operators.kernels import (
-    checktable_df,
     checktable_oracle_sql,
+    checktable_sql,
     checktable_violations_df,
-    fk_orphan_counts_df,
     run_checkalloc,
     run_checkcatalog,
     run_checktable,
+    run_extended_logical,
+    sql_frame,
 )
 from integritychecksforvldbs_spark.sources.catalog import (
     FileMeta,
@@ -29,7 +36,7 @@ def test_checktable_matches_duckdb_oracle(spark, tables, duck, table):
     """The fused single-pass aggregation returns identical counters in
     Spark and DuckDB for every fixture table (SURVEY §5.2 test 3)."""
     exp = expectations_for(table)
-    srow = checktable_df(tables[table], exp).collect()[0].asDict()
+    srow = sql_frame(spark, checktable_sql(exp), {table: tables[table]}).collect()[0].asDict()
     cur = duck.execute(checktable_oracle_sql(table, exp))
     drow = dict(zip([d[0] for d in cur.description], cur.fetchone()))
     assert srow == drow
@@ -144,19 +151,15 @@ def test_embeddings_vector_length_invariant(spark, tables):
 
 def test_fk_orphans_match_duckdb(spark, tables, duck):
     exp = expectations_for("lineitem")
-    rows = {
-        (r["fk_columns"], r["orphan_rows"])
-        for r in fk_orphan_counts_df(tables, exp).collect()
-    }
-    expected = set()
+    res = run_extended_logical(spark, tables, "db", "lineitem", exp)
     for fk in exp.foreign_keys:
         c, p = fk.columns[0], fk.parent_columns[0]
         n = duck.execute(
             f"SELECT count(*) FROM lineitem l WHERE l.{c} IS NOT NULL "
             f"AND NOT EXISTS (SELECT 1 FROM {fk.parent_table} p WHERE p.{p} = l.{c})"
         ).fetchone()[0]
-        expected.add((c, n))
-    assert rows == expected
+        assert res.metrics[f"orphans_{c}"] == n
+    assert res.metrics["n_fks"] == 3
 
 
 def test_fk_orphan_detection(spark, tables):
@@ -165,90 +168,259 @@ def test_fk_orphan_detection(spark, tables):
     some_key = orders.select("o_orderkey").limit(1).collect()[0][0]
     broken = {**tables, "orders": orders.filter(f"o_orderkey <> {some_key}")}
     n_children = tables["lineitem"].filter(f"l_orderkey = {some_key}").count()
-    rows = {
-        r["fk_columns"]: r["orphan_rows"]
-        for r in fk_orphan_counts_df(broken, expectations_for("lineitem")).collect()
-    }
-    base = {
-        r["fk_columns"]: r["orphan_rows"]
-        for r in fk_orphan_counts_df(tables, expectations_for("lineitem")).collect()
-    }
-    assert rows["l_orderkey"] - base["l_orderkey"] == n_children
+    exp = expectations_for("lineitem")
+    rows = run_extended_logical(spark, broken, "db", "lineitem", exp).metrics
+    base = run_extended_logical(spark, tables, "db", "lineitem", exp).metrics
+    assert rows["orphans_l_orderkey"] - base["orphans_l_orderkey"] == n_children
+    res = run_checktable(spark, tables["lineitem"], "db", "lineitem", exp, parents=broken)
+    assert f"FK lineitem(l_orderkey) → orders: {rows['orphans_l_orderkey']} orphan row(s)" \
+        in res.errors
 
 
-def _fk_rows(tables, exp, broadcast):
-    return {
-        (r["fk_columns"], r["parent_table"]): r["orphan_rows"]
-        for r in fk_orphan_counts_df(
-            tables, exp, broadcast_parents=broadcast
-        ).collect()
-    }
+# ---------------------------------------------------------------------------
+# checktable_sql: the Spark dialect against the DuckDB dialect of the same
+# render, over the same parquet files, for every FK layout
+# ---------------------------------------------------------------------------
 
-
-def test_fk_orphans_fused_equals_antijoin(spark):
-    """The fused all-broadcast branch must match the per-FK anti-join
-    path on its unpinned edges: multi-FK child, a parent with duplicate
-    keys, and NULL child FK values (DIC extended-checks semantics —
-    NULL FKs are not orphans)."""
-    from integritychecksforvldbs_spark.expectations import (
-        ForeignKey,
-        TableExpectations,
-    )
-
-    child = spark.createDataFrame(
+_MULTI_FK = TableExpectations(
+    table="child",
+    primary_key=["ck"],
+    not_null=["a_key"],
+    foreign_keys=[
+        ForeignKey(["a_key"], "parent_a", ["pa"]),
+        ForeignKey(["b_key"], "parent_b", ["pb"]),
+    ],
+)
+_MULTI_FK_TABLES = {
+    "child": (
         [
             (1, 10, 100),  # both parents present
             (2, 11, 101),  # a-parent missing
             (3, None, 100),  # NULL a-key: not an orphan for fk_a
             (4, 12, None),  # NULL b-key: not an orphan for fk_b
             (5, 12, 999),  # b-parent missing
-            (6, 10, 100),  # dup of row 1 — counted once per row
+            (6, 10, 100),  # same keys as row 1: counted once per row
         ],
-        "ck bigint, a_key bigint, b_key bigint",
-    )
-    # parent_a has DUPLICATE keys (10 twice): fan-out must not multiply
-    # the later fk_b orphan counts in the chained fused join
-    parent_a = spark.createDataFrame(
-        [(10, "x"), (10, "y"), (12, "z")], "pa bigint, pad string"
-    )
-    parent_b = spark.createDataFrame([(100,), (101,)], "pb bigint")
-    tables = {"child": child, "parent_a": parent_a, "parent_b": parent_b}
-    exp = TableExpectations(
-        table="child",
-        foreign_keys=[
-            ForeignKey(["a_key"], "parent_a", ["pa"]),
-            ForeignKey(["b_key"], "parent_b", ["pb"]),
-        ],
-    )
-    fused = _fk_rows(tables, exp, {"parent_a", "parent_b"})
-    anti = _fk_rows(tables, exp, set())
-    assert fused == anti
-    assert fused == {
-        ("a_key", "parent_a"): 1,  # row 2 only (row 3 NULL-skipped)
-        ("b_key", "parent_b"): 1,  # row 5 only (row 4 NULL-skipped)
-    }
+        [("ck", pa.int64()), ("a_key", pa.int64()), ("b_key", pa.int64())],
+    ),
+    # duplicate parent keys (10 twice): a join that fanned out would
+    # count rows 1 and 6 twice in every counter
+    "parent_a": ([(10, "x"), (10, "y"), (12, "z")], [("pa", pa.int64()), ("pad", pa.string())]),
+    "parent_b": ([(100,), (101,), (101,)], [("pb", pa.int64())]),
+}
+_MULTI_FK_WANT = {"n_rows": 6, "null_a_key": 1, "pk_dup_rows": 0,
+                  "orphans_a_key": 1, "orphans_b_key": 1}
+
+RENDER_CASES = {
+    "multi_fk_dup_parent_keys": (
+        _MULTI_FK, _MULTI_FK_TABLES, {"broadcast_parents": {"parent_a", "parent_b"}},
+        _MULTI_FK_WANT,
+    ),
+    "multi_fk_fk_only": (
+        _MULTI_FK, _MULTI_FK_TABLES,
+        {"counters": False, "broadcast_parents": {"parent_a", "parent_b"}},
+        {"orphans_a_key": 1, "orphans_b_key": 1},
+    ),
+    "parent_not_broadcast_small": (
+        _MULTI_FK, _MULTI_FK_TABLES, {"broadcast_parents": {"parent_b"}}, _MULTI_FK_WANT,
+    ),
+    "no_parent_broadcast_small": (
+        _MULTI_FK, _MULTI_FK_TABLES, {"counters": False, "broadcast_parents": set()},
+        {"orphans_a_key": 1, "orphans_b_key": 1},
+    ),
+    "composite_fk_partly_null": (
+        TableExpectations(
+            table="child", foreign_keys=[ForeignKey(["k1", "k2"], "parent", ["k1", "k2"])]
+        ),
+        {
+            "child": (
+                # matched; orphan (1, b); two partly NULL tuples, skipped
+                [(1, 1, "a"), (2, 1, "b"), (3, None, "a"), (4, 2, None)],
+                [("id", pa.int64()), ("k1", pa.int64()), ("k2", pa.string())],
+            ),
+            "parent": ([(1, "a"), (2, "b"), (2, "b")], [("k1", pa.int64()), ("k2", pa.string())]),
+        },
+        {"broadcast_parents": {"parent"}},
+        {"n_rows": 4, "orphans_k1_k2": 1},
+    ),
+    "empty_child": (
+        _MULTI_FK,
+        {**_MULTI_FK_TABLES, "child": ([], _MULTI_FK_TABLES["child"][1])},
+        {"broadcast_parents": {"parent_a"}},
+        # SUM over no rows is NULL; the anti arm's COUNT is 0
+        {"n_rows": 0, "null_a_key": None, "orphans_a_key": None, "orphans_b_key": 0},
+    ),
+    "physical_only": (
+        _MULTI_FK, _MULTI_FK_TABLES, {"physical_only": True}, {"n_rows": 6},
+    ),
+    "embeddings_null_and_empty_array": (
+        expectations_for("embeddings"),
+        {
+            "embeddings": (
+                [(1, [0.5, 1.0]), (2, None), (3, [])],
+                [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))],
+            ),
+        },
+        {"envelope": True},
+        # size/len of a NULL array is NULL in both engines
+        {"n_rows": 3, "null_embedding": 1, "vector_len_min": 0, "vector_len_max": 2},
+    ),
+}
 
 
-def test_fk_orphans_fused_single_fk_dup_parent(spark):
-    """Single-FK child keeps exact counts without parent dedup even
-    when the parent has duplicate keys (left join fans out matches,
-    never zero-match orphan rows)."""
-    from integritychecksforvldbs_spark.expectations import (
-        ForeignKey,
-        TableExpectations,
+def _render_case_tables(spark, tmp_path, data):
+    import duckdb
+
+    from integritychecksforvldbs_spark.sources.loader import load_table
+
+    con = duckdb.connect()
+    frames = {}
+    for name, (rows, fields) in data.items():
+        path = str(tmp_path / f"{name}.parquet")
+        schema = pa.schema(fields)
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema), path
+        )
+        frames[name] = load_table(spark, path)
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    return frames, con
+
+
+@pytest.mark.parametrize("case", RENDER_CASES)
+def test_render_spark_matches_duckdb_dialect(spark, tmp_path, case):
+    exp, data, render, want = RENDER_CASES[case]
+    frames, con = _render_case_tables(spark, tmp_path, data)
+    srow = sql_frame(spark, checktable_sql(exp, "spark", **render), frames).collect()[0].asDict()
+    cur = con.execute(checktable_sql(exp, "duckdb", **render))
+    drow = dict(zip([d[0] for d in cur.description], cur.fetchone()))
+    con.close()
+    assert srow == drow
+    assert {k: srow[k] for k in want} == want
+
+
+@pytest.mark.parametrize("case", ["multi_fk_dup_parent_keys", "parent_not_broadcast_small"])
+def test_run_checktable_fused_command(spark, tmp_path, case):
+    """The kernel runs the same render, planned from catalog sizes:
+    a parent without a size counts as large and gets its anti arm."""
+    exp, data, render, want = RENDER_CASES[case]
+    frames, con = _render_case_tables(spark, tmp_path, data)
+    con.close()
+    sizes = {t: 1000 for t in ("child", *render["broadcast_parents"])}
+    res = run_checktable(
+        spark, frames["child"], "db", "child", exp, parents=frames, sizes=sizes
+    )
+    assert {k: res.metrics[k] for k in want} == want
+    assert res.metrics["n_fks"] == 2
+    assert res.errors == [
+        "null_a_key = 1",
+        "FK child(a_key) → parent_a: 1 orphan row(s)",
+        "FK child(b_key) → parent_b: 1 orphan row(s)",
+    ]
+
+
+def test_checktable_command_job_count_and_settings(spark, tables):
+    """A metadata-sized CHECKTABLE command with k broadcast FK parents
+    starts at most 1 + k Spark jobs, and leaves the session's AQE and
+    shuffle-partition settings as they were, also when it raises."""
+    import uuid
+
+    from integritychecksforvldbs_spark.expectations import DomainRule
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    objs = {o.object_name: o for o in list_objects(spark, "sf", SF_DIR)}
+    sizes = {t: o.total_bytes for t, o in objs.items()}
+    exp = expectations_for("lineitem")
+    group = f"checktable-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "one CHECKTABLE command")
+    try:
+        res = run_checktable(
+            spark, tables["lineitem"], "db", "lineitem", exp, parents=tables, sizes=sizes
+        )
+        bus.waitUntilEmpty(10_000)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+    assert res.metrics["n_fks"] == 3
+    assert 1 <= len(jobs) <= 1 + len(exp.foreign_keys)
+    assert {k: spark.conf.get(k) for k in keys} == before
+    # a row-level failure raises inside the planned scope
+    boom = TableExpectations(
+        "lineitem", domain_rules=[DomainRule("boom", "assert_true(l_linenumber < 0) IS NULL")]
+    )
+    with pytest.raises(Exception, match="l_linenumber"):
+        run_checktable(spark, tables["lineitem"], "db", "lineitem", boom, sizes=sizes)
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_plan_conf_sizes_partitions_from_bytes(spark):
+    from integritychecksforvldbs_spark.functions.planutil import scoped_conf
+    from integritychecksforvldbs_spark.operators.kernels import (
+        BROADCAST_THRESHOLD_BYTES,
+        _plan_conf,
     )
 
-    child = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 77), (4, None)], "ck bigint, a_key bigint"
-    )
-    parent = spark.createDataFrame([(10,), (10,), (11,)], "pa bigint")
-    tables = {"child": child, "parent_a": parent}
-    exp = TableExpectations(
-        table="child", foreign_keys=[ForeignKey(["a_key"], "parent_a", ["pa"])]
-    )
-    fused = _fk_rows(tables, exp, {"parent_a"})
-    anti = _fk_rows(tables, exp, set())
-    assert fused == anti == {("a_key", "parent_a"): 1}
+    mb = 1 << 20
+    with scoped_conf(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1MB",
+                             "spark.sql.shuffle.partitions": "8"}):
+        assert _plan_conf(spark, None) == {}
+        assert _plan_conf(spark, BROADCAST_THRESHOLD_BYTES) == {}
+        parts = {n: _plan_conf(spark, n)["spark.sql.shuffle.partitions"]
+                 for n in (0, 1, mb, mb + 1, 3 * mb, 100 * mb)}
+        assert parts == {0: "1", 1: "1", mb: "1", mb + 1: "2", 3 * mb: "3", 100 * mb: "8"}
+        assert _plan_conf(spark, 1)["spark.sql.adaptive.enabled"] == "false"
+
+
+def test_scoped_conf_restores_on_error_timeout_and_across_threads(spark):
+    """Restore with set(previous), also when the block raises or a
+    lock-timed-out kernel thread finishes late; scopes in other threads
+    wait, so none reads another scope's values as 'previous'."""
+    import sys
+    import threading
+    import time
+
+    from integritychecksforvldbs_spark.functions.planutil import scoped_conf
+    from integritychecksforvldbs_spark.plans.runner import _run_with_timeout
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {key: "1"}):
+            raise RuntimeError
+    assert spark.conf.get(key) == before
+
+    def slow_kernel():
+        with scoped_conf(spark, {key: "1"}):
+            time.sleep(2)
+
+    with pytest.raises(TimeoutError):
+        _run_with_timeout(spark, slow_kernel, 0.2, "slow")
+    assert spark.conf.get(key) == before
+
+    # more threads than cores, switching often: inside its scope each
+    # thread must read its own value, and the session's value survives
+    seen = []
+
+    def worker(i):
+        for _ in range(20):
+            with scoped_conf(spark, {key: str(10 + i)}):
+                seen.append(spark.conf.get(key) == str(10 + i))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 160 and all(seen)
+    assert spark.conf.get(key) == before
 
 
 def _copy_table(tmp_path, table):

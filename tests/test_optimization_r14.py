@@ -212,121 +212,3 @@ def test_hashed_shingles_max_df_matches_string_cut(spark, docs):
     got = {(r["doc_id"], r["c"]) for r in hs.collect()}
     want = {(r["doc_id"], r["c"]) for r in ss.collect()}
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# fk_orphan_counts_union_sql: the one-parse whole-graph SQL form must
-# equal the per-child DataFrame chains it replaces (VERDICT r13 #8) —
-# fused arms, anti-join fallback arms, and the mix of both.
-# ---------------------------------------------------------------------------
-
-
-def _fk_rows(df):
-    return sorted(
-        (r["child_table"], r["fk_columns"], r["parent_table"], r["orphan_rows"])
-        for r in df.collect()
-    )
-
-
-@pytest.fixture(scope="module")
-def fk_graph(spark):
-    from integritychecksforvldbs_spark.expectations import (
-        ForeignKey,
-        TableExpectations,
-    )
-
-    child1 = spark.createDataFrame(
-        [
-            (1, 10, "a"),
-            (2, 10, "b"),
-            (3, 99, "a"),     # orphan on fk1
-            (4, None, "b"),   # NULL -> skipped
-            (5, 20, "zz"),    # orphan on fk2
-            (6, 99, "zz"),    # orphan on both
-        ],
-        "id bigint, p1_id bigint, p2_code string",
-    )
-    # second child exercises the composite-key arm
-    child2 = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b"), (3, None, "a")],
-        "id bigint, k1 bigint, k2 string",
-    )
-    parent1 = spark.createDataFrame(
-        [(10, "x"), (10, "y"), (20, "z")], "p1_id bigint, payload string"
-    )
-    parent2 = spark.createDataFrame(
-        [("a", 1), ("b", 2)], "p2_code string, n int"
-    )
-    parentc = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (2, "b")], "k1 bigint, k2 string"
-    )
-    tables = {
-        "child1": child1,
-        "child2": child2,
-        "parent1": parent1,
-        "parent2": parent2,
-        "parentc": parentc,
-    }
-    exps = [
-        TableExpectations(
-            table="child1",
-            foreign_keys=[
-                ForeignKey(["p1_id"], "parent1", ["p1_id"]),
-                ForeignKey(["p2_code"], "parent2", ["p2_code"]),
-            ],
-        ),
-        TableExpectations(
-            table="child2",
-            foreign_keys=[ForeignKey(["k1", "k2"], "parentc", ["k1", "k2"])],
-        ),
-        TableExpectations(table="parent1"),  # no FKs: contributes nothing
-    ]
-    return tables, exps
-
-
-@pytest.mark.parametrize(
-    "broadcast",
-    [
-        {"parent1", "parent2", "parentc"},  # all fused
-        set(),                              # all anti-join fallback
-        {"parent1", "parentc"},             # child1 mixed -> fallback, child2 fused
-    ],
-    ids=["all_fused", "all_fallback", "mixed"],
-)
-def test_union_sql_equals_per_child_chains(spark, fk_graph, broadcast):
-    from integritychecksforvldbs_spark.operators.kernels import (
-        fk_orphan_counts_df,
-        fk_orphan_counts_union_sql,
-    )
-
-    tables, exps = fk_graph
-    got = _fk_rows(
-        fk_orphan_counts_union_sql(spark, tables, exps, broadcast)
-    )
-    want = []
-    for exp in exps:
-        if not exp.foreign_keys:
-            continue
-        want.extend(_fk_rows(fk_orphan_counts_df(tables, exp, broadcast)))
-    assert got == sorted(want)
-    assert got == [
-        ("child1", "p1_id", "parent1", 2),
-        ("child1", "p2_code", "parent2", 2),
-        ("child2", "k1_k2", "parentc", 1),
-    ]
-
-
-def test_union_sql_no_fk_specs_is_empty(spark, fk_graph):
-    from integritychecksforvldbs_spark.operators.kernels import (
-        fk_orphan_counts_union_sql,
-    )
-
-    tables, _ = fk_graph
-    out = fk_orphan_counts_union_sql(spark, tables, [], set())
-    assert out.count() == 0
-    assert out.columns == [
-        "child_table",
-        "fk_columns",
-        "parent_table",
-        "orphan_rows",
-    ]

@@ -76,7 +76,7 @@ def test_checktable_dup_key_probe_bucketed_no_data_shuffle(spark, tmp_path_facto
     per-task gather remains.  The same kernel on plain parquet
     repartitions the fact table (the control)."""
     from integritychecksforvldbs_spark.expectations import expectations_for
-    from integritychecksforvldbs_spark.operators.kernels import checktable_df
+    from integritychecksforvldbs_spark.operators.kernels import checktable_sql, sql_frame
     from integritychecksforvldbs_spark.sources.bucketing import (
         bucketed_mirror,
         plan_data_shuffles,
@@ -89,14 +89,14 @@ def test_checktable_dup_key_probe_bucketed_no_data_shuffle(spark, tmp_path_facto
         spark, li, "lineitem_pk_b", ["l_orderkey", "l_linenumber"], 8,
         path=str(wh / "lineitem_pk_b"),
     )
+    def checktable(df):
+        return sql_frame(spark, checktable_sql(exp), {"lineitem": df})
+
     try:
-        assert plan_data_shuffles(checktable_df(bucketed, exp)) == 0
-        assert plan_data_shuffles(checktable_df(li, exp)) > 0  # control
+        assert plan_data_shuffles(checktable(bucketed)) == 0
+        assert plan_data_shuffles(checktable(li)) > 0  # control
         # identical counters either way
-        assert (
-            checktable_df(bucketed, exp).collect()
-            == checktable_df(li, exp).collect()
-        )
+        assert checktable(bucketed).collect() == checktable(li).collect()
     finally:
         spark.sql("DROP TABLE IF EXISTS lineitem_pk_b")
 
@@ -109,7 +109,7 @@ def test_fk_orphan_probe_cobucketed_no_data_shuffle(spark, tmp_path_factory):
         ForeignKey,
         TableExpectations,
     )
-    from integritychecksforvldbs_spark.operators.kernels import fk_orphan_counts_df
+    from integritychecksforvldbs_spark.operators.kernels import checktable_sql, sql_frame
     from integritychecksforvldbs_spark.sources.bucketing import (
         bucketed_mirror,
         plan_data_shuffles,
@@ -132,9 +132,11 @@ def test_fk_orphan_probe_cobucketed_no_data_shuffle(spark, tmp_path_factory):
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = fk_orphan_counts_df({"lineitem": li_b, "orders": o_b}, exp)
+        # the FK count alone, as an anti-join arm (no broadcast parent)
+        text = checktable_sql(exp, counters=False, broadcast_parents=set())
+        probe = sql_frame(spark, text, {"lineitem": li_b, "orders": o_b})
         assert plan_data_shuffles(probe) == 0
-        plain = fk_orphan_counts_df({"lineitem": li, "orders": orders}, exp)
+        plain = sql_frame(spark, text, {"lineitem": li, "orders": orders})
         assert plan_data_shuffles(plain) > 0  # control
         assert probe.collect() == plain.collect()
     finally:
