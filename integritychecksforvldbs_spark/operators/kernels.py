@@ -46,7 +46,6 @@ pushdown/column pruning reach the parquet reader.
 from __future__ import annotations
 
 import functools
-import re
 from collections.abc import Collection
 from dataclasses import dataclass, field
 from typing import Any
