@@ -2396,9 +2396,7 @@ def _q_tokens_bpe_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from integritychecksforvldbs_spark.operators.kernels import (
-        BROADCAST_THRESHOLD_BYTES,
-    )
+    from integritychecksforvldbs_spark.operators.kernels import broadcast_small
 
     # load only the tables the FK graph touches (children + parents):
     # every load_table call is driver work the timed run pays for
@@ -2409,10 +2407,7 @@ def _q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables = {t: _load(spark, sf_dir, t) for t in TABLES if t in needed}
     # pin the broadcast hint only for parents the catalog proves small;
     # catalog sizing sums part-files, so directory-backed tables work too
-    sizes = _catalog_sizes(spark, sf_dir)
-    small = {
-        t for t in TABLES if sizes.get(t, BROADCAST_THRESHOLD_BYTES) < BROADCAST_THRESHOLD_BYTES
-    }
+    small = broadcast_small(_catalog_sizes(spark, sf_dir))
     # ONE parsed-SQL union of every child's FK-only CHECKTABLE text,
     # unpivoted to one row per FK: a single parse + analysis pass
     # (r14: DataFrame-chain construction was ~54% of this query's time)

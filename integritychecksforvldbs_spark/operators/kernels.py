@@ -31,12 +31,13 @@ each kernel is a distributed Spark validation query:
   (DIC:1352-1365).
 
 A command is planned for its size, from the byte counts the catalog
-already holds (:func:`_plan_conf`): below ``BROADCAST_THRESHOLD_BYTES``
+already holds (:func:`_plan_conf`): below ``SMALL_COMMAND_BYTES``
 (child plus FK parents) it runs with AQE off and a shuffle partition
 count sized to the advisory partition size, so it costs one Spark job
 plus one per broadcast parent.  At that size a check is almost all
 per-job overhead, and AQE would reach the same partition count only
-after the shuffle, paying for it in extra jobs.
+after the shuffle, paying for it in extra jobs.  Larger commands keep
+the session's settings.
 
 Everything stays JVM-side (built-in functions only — no Python UDFs),
 so WholeStageCodegen covers the scan→agg pipeline and predicate
@@ -65,6 +66,12 @@ from ..sources.catalog import (
 from ..sources.loader import load_table
 
 BROADCAST_THRESHOLD_BYTES = 256 * 1024 * 1024  # dims under this broadcast
+# commands under this run with AQE off (_plan_conf).  Measured on
+# local[4] over 1x-16x replicas of the sf0.1 tables: every command
+# under 1 MiB ran faster with AQE off; from ~2 MiB up, a CHECKTABLE
+# whose COUNT(DISTINCT) lands in one shuffle partition ran up to 1.6x
+# slower than under AQE, which keeps the session's parallelism.
+SMALL_COMMAND_BYTES = 1 << 20
 
 
 # ---------------------------------------------------------------------------
@@ -127,6 +134,13 @@ def _orphans_alias(fk: ForeignKey) -> str:
     return "orphans_" + "_".join(fk.columns)
 
 
+def _placeholder(t: str) -> str:
+    """The format field binding table ``t`` in Spark-dialect text; a
+    name that is not an identifier (a ``<name>.parquet`` directory
+    table) is hex-encoded, since ``.`` would read as an attribute."""
+    return f"t_{t}" if t.isidentifier() else f"h_{t.encode().hex()}"
+
+
 def checktable_sql(
     exp: TableExpectations,
     dialect: str = "spark",
@@ -149,11 +163,11 @@ def checktable_sql(
     a one-row aggregate.  A child row is an orphan only when all its
     key columns are non-NULL and the tuple has no parent.
 
-    Tables are named ``{t_<name>}`` in the Spark dialect (bind them
-    with :func:`sql_frame`) and by bare name in DuckDB.
+    Tables are format fields in the Spark dialect (bind them with
+    :func:`sql_frame`) and bare names in DuckDB.
     """
     def ref(t: str) -> str:
-        return "{t_" + t + "}" if dialect == "spark" else t
+        return "{" + _placeholder(t) + "}" if dialect == "spark" else t
 
     fks = [] if broadcast_parents is None else exp.foreign_keys
     fused = [(i, fk) for i, fk in enumerate(fks) if fk.parent_table in broadcast_parents]
@@ -175,8 +189,8 @@ def checktable_sql(
         on = " AND ".join(f"c.{c} = p{i}._p{i}_{j}" for j, c in enumerate(fk.columns))
         joins.append(f"\nLEFT JOIN {side} p{i} ON {on}")
         nn = " AND ".join(f"c.{c} IS NOT NULL" for c in fk.columns)
-        cols.append(f"CAST(SUM(CASE WHEN {nn} AND p{i}._p{i}_0 IS NULL "
-                    f"THEN 1 ELSE 0 END) AS BIGINT) AS {_orphans_alias(fk)}")
+        cols.append(f"CAST(COUNT(CASE WHEN {nn} AND p{i}._p{i}_0 IS NULL "
+                    f"THEN 1 END) AS BIGINT) AS {_orphans_alias(fk)}")
     arms = []
     if cols:
         hint = ", ".join(f"BROADCAST(p{i})" for i, _ in fused)
@@ -201,9 +215,9 @@ def checktable_sql(
 
 
 def sql_frame(spark: SparkSession, text: str, tables: dict[str, DataFrame]) -> DataFrame:
-    """Spark-dialect renderer text as a DataFrame, each ``{t_<name>}``
+    """Spark-dialect renderer text as a DataFrame, each table's field
     bound to ``tables[name]`` (one parse and one analysis pass)."""
-    return spark.sql(text, **{f"t_{t}": df for t, df in tables.items()})
+    return spark.sql(text, **{_placeholder(t): df for t, df in tables.items()})
 
 
 def checktable_oracle_sql(
@@ -234,16 +248,26 @@ class KernelResult:
 _NON_VIOLATION_METRICS = {"n_rows", "vector_len_min", "vector_len_max"}
 
 
+def broadcast_small(sizes: dict[str, int]) -> set[str]:
+    """The tables whose catalog byte count proves them broadcast-small."""
+    return {t for t, n in sizes.items() if n < BROADCAST_THRESHOLD_BYTES}
+
+
+def _command_bytes(sizes: dict[str, int], names: set[str]) -> int | None:
+    """Catalog bytes of one command's tables; None if one is unknown."""
+    return sum(sizes[t] for t in names) if names <= sizes.keys() else None
+
+
 def _plan_conf(spark: SparkSession, nbytes: int | None) -> dict[str, str]:
     """The settings one command runs under, from its catalog byte count.
 
-    Below ``BROADCAST_THRESHOLD_BYTES``: AQE off, and
+    Below ``SMALL_COMMAND_BYTES``: AQE off, and
     ``ceil(nbytes / advisoryPartitionSizeInBytes)`` shuffle partitions
     clamped to [1, the session's value] — the size AQE would coalesce
     to only after the shuffle, in extra jobs.  Unknown or larger
     commands keep the session's settings.
     """
-    if nbytes is None or nbytes >= BROADCAST_THRESHOLD_BYTES:
+    if nbytes is None or nbytes >= SMALL_COMMAND_BYTES:
         return {}
     advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
@@ -256,10 +280,13 @@ def _plan_conf(spark: SparkSession, nbytes: int | None) -> dict[str, str]:
 def _collect_row(
     spark: SparkSession, text: str, tables: dict[str, DataFrame], nbytes: int | None = None
 ) -> dict[str, Any]:
-    """Run one rendered command under its planned settings; its one row."""
+    """Plan one rendered command under its planned settings, then run
+    it; its one row.  The job runs after the scope has restored the
+    session: a job that outlives its lock timeout holds no settings."""
     df = sql_frame(spark, text, tables)
     with scoped_conf(spark, _plan_conf(spark, nbytes)):
-        return df.collect()[0].asDict()
+        df._jdf.queryExecution().executedPlan()
+    return df.collect()[0].asDict()
 
 
 def _counter_errors(row: dict[str, Any]) -> list[str]:
@@ -297,19 +324,15 @@ def _checktable_command(
     """One CHECKTABLE command: (row, counter errors, FK errors)."""
     sizes = sizes or {}
     fks = parents is not None and bool(exp.foreign_keys) and not physical_only
-    small = None
-    names = {table}
-    if fks:
-        names |= {fk.parent_table for fk in exp.foreign_keys}
-        small = {t for t in names if sizes.get(t, BROADCAST_THRESHOLD_BYTES)
-                 < BROADCAST_THRESHOLD_BYTES}
+    names = {table} | ({fk.parent_table for fk in exp.foreign_keys} if fks else set())
     text = checktable_sql(
         exp, "spark", physical_only,
         envelope=not physical_only and "embedding" in df.columns,
-        broadcast_parents=small,
+        broadcast_parents=broadcast_small(sizes) if fks else None,
     )
-    nbytes = sum(sizes[t] for t in names) if names <= sizes.keys() else None
-    row = _collect_row(spark, text, {**(parents or {}), table: df}, nbytes)
+    row = _collect_row(
+        spark, text, {**(parents or {}), table: df}, _command_bytes(sizes, names)
+    )
     errors = _counter_errors(row)
     if not fks:
         return row, errors, []
@@ -442,19 +465,23 @@ def run_extended_logical(
     database: str,
     table: str,
     exp: TableExpectations | None = None,
-    broadcast_parents: set[str] | None = None,
+    sizes: dict[str, int] | None = None,
 ) -> KernelResult:
     """EXTENDED_LOGICAL_CHECKS alone: the FK orphan counts of
     :func:`checktable_sql` without the CHECKTABLE counters, for when
     CHECKTABLE itself runs elsewhere (the incremental path).  Parents
-    in ``broadcast_parents`` share one scan of the child; the rest get
-    LEFT ANTI arms whose join strategy Catalyst/AQE picks (forcing a
-    broadcast of a large parent would OOM every executor)."""
+    that ``sizes`` (catalog bytes by table name) proves broadcast-small
+    share one scan of the child; the rest get LEFT ANTI arms whose join
+    strategy Catalyst/AQE picks (forcing a broadcast of a large parent
+    would OOM every executor).  The command is planned as in
+    :func:`run_checktable`."""
     exp = exp or expectations_for(table)
     if not exp.foreign_keys:
         return KernelResult("EXTENDED_LOGICAL", database, table, True, {"n_fks": 0})
-    text = checktable_sql(exp, counters=False, broadcast_parents=broadcast_parents or set())
-    row = _collect_row(spark, text, tables)
+    sizes = sizes or {}
+    text = checktable_sql(exp, counters=False, broadcast_parents=broadcast_small(sizes))
+    names = {table} | {fk.parent_table for fk in exp.foreign_keys}
+    row = _collect_row(spark, text, tables, _command_bytes(sizes, names))
     errors = _fk_errors(row, exp)
     row["n_fks"] = len(exp.foreign_keys)
     return KernelResult("EXTENDED_LOGICAL", database, table, not errors, row, errors)

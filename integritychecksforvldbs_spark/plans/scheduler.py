@@ -736,7 +736,7 @@ class IntegrityChecker:
                 self.spark, table(obj), dbname, obj.object_name, exp,
                 physical_only, parents=parents, sizes=sizes,
             )
-        from ..operators.kernels import BROADCAST_THRESHOLD_BYTES, run_checktable_incremental
+        from ..operators.kernels import run_checktable_incremental
 
         result = run_checktable_incremental(
             self.spark, obj, f"{self.params.incremental_state_dir}/{dbname}", exp,
@@ -745,10 +745,7 @@ class IntegrityChecker:
         if parents is not None:
             ext = run_extended_logical(
                 self.spark, {**parents, obj.object_name: table(obj)},
-                dbname, obj.object_name, exp,
-                broadcast_parents={
-                    t for t in parents if sizes[t] < BROADCAST_THRESHOLD_BYTES
-                },
+                dbname, obj.object_name, exp, sizes,
             )
             result.metrics.update(ext.metrics)
             if not ext.passed:

@@ -247,8 +247,8 @@ RENDER_CASES = {
         _MULTI_FK,
         {**_MULTI_FK_TABLES, "child": ([], _MULTI_FK_TABLES["child"][1])},
         {"broadcast_parents": {"parent_a"}},
-        # SUM over no rows is NULL; the anti arm's COUNT is 0
-        {"n_rows": 0, "null_a_key": None, "orphans_a_key": None, "orphans_b_key": 0},
+        # a SUM counter over no rows is NULL; both orphan counts are 0
+        {"n_rows": 0, "null_a_key": None, "orphans_a_key": 0, "orphans_b_key": 0},
     ),
     "physical_only": (
         _MULTI_FK, _MULTI_FK_TABLES, {"physical_only": True}, {"n_rows": 6},
@@ -318,6 +318,88 @@ def test_run_checktable_fused_command(spark, tmp_path, case):
     ]
 
 
+@pytest.mark.parametrize("case,want", [
+    ("multi_fk_dup_parent_keys", ["BroadcastHashJoin LeftOuter"] * 2),
+    ("parent_not_broadcast_small", ["BroadcastHashJoin LeftOuter", "SortMergeJoin LeftAnti"]),
+])
+def test_render_broadcasts_small_parents(spark, tmp_path, case, want):
+    """Plan probe: with size-based broadcasting off, a parent named in
+    ``broadcast_parents`` still joins the child's one scan as a
+    broadcast, and only the other parent's anti arm sort-merges."""
+    import re
+
+    from integritychecksforvldbs_spark.functions.planutil import scoped_conf
+
+    exp, data, render, _ = RENDER_CASES[case]
+    frames, con = _render_case_tables(spark, tmp_path, data)
+    con.close()
+    df = sql_frame(spark, checktable_sql(exp, "spark", **render), frames)
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false",
+                             "spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    joins = re.findall(r"(BroadcastHashJoin|SortMergeJoin) .*?, (LeftOuter|LeftAnti|Inner)", plan)
+    assert sorted(" ".join(j) for j in joins) == want
+
+
+def test_running_job_holds_no_settings(spark, tables):
+    """A command's job runs after its settings scope has closed: while
+    one command's job is still running (as when a lock timeout's
+    cancel comes too late), the next planned command runs at once."""
+    import threading
+    import time
+    import uuid
+
+    from integritychecksforvldbs_spark.operators.kernels import _collect_row
+
+    sc = spark.sparkContext
+    group = f"slow-{uuid.uuid4().hex[:8]}"
+
+    def slow():
+        sc.setJobGroup(group, "slow", interruptOnCancel=True)
+        try:
+            _collect_row(
+                spark, "SELECT MAX(s) AS n FROM (SELECT java_method("
+                "'java.lang.Thread', 'sleep', id + 60000) AS s FROM {t_r})",
+                {"r": spark.range(1)}, 1,
+            )
+        except Exception:
+            pass  # cancelled below
+        finally:
+            sc.setJobGroup("", "")
+
+    t = threading.Thread(target=slow, daemon=True)
+    t.start()
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    try:
+        assert sc.statusTracker().getJobIdsForGroup(group)
+        t0 = time.monotonic()
+        res = run_checktable(spark, tables["region"], "db", "region", sizes={"region": 1})
+        assert time.monotonic() - t0 < 30 and res.metrics["n_rows"] == 5
+        assert t.is_alive()
+    finally:
+        sc.cancelJobGroup(group)
+        t.join(30)
+    assert not t.is_alive()
+
+
+def test_dotted_table_name_binds(spark, tmp_path):
+    """A directory table is named ``<name>.parquet`` by the catalog;
+    the Spark dialect still binds it and its parent."""
+    exp = TableExpectations(
+        table="child.parquet", primary_key=["ck"],
+        foreign_keys=[ForeignKey(["a_key"], "parent-a.parquet", ["pa"])],
+    )
+    frames, con = _render_case_tables(spark, tmp_path, _MULTI_FK_TABLES)
+    con.close()
+    parents = {"parent-a.parquet": frames["parent_a"]}
+    for sizes in ({}, {"child.parquet": 1, "parent-a.parquet": 1}):
+        res = run_checktable(spark, frames["child"], "db", "child.parquet", exp,
+                             parents=parents, sizes=sizes)
+        assert (res.metrics["n_rows"], res.metrics["orphans_a_key"]) == (6, 1)
+
+
 def test_checktable_command_job_count_and_settings(spark, tables):
     """A metadata-sized CHECKTABLE command with k broadcast FK parents
     starts at most 1 + k Spark jobs, and leaves the session's AQE and
@@ -358,18 +440,19 @@ def test_checktable_command_job_count_and_settings(spark, tables):
 def test_plan_conf_sizes_partitions_from_bytes(spark):
     from integritychecksforvldbs_spark.functions.planutil import scoped_conf
     from integritychecksforvldbs_spark.operators.kernels import (
-        BROADCAST_THRESHOLD_BYTES,
+        SMALL_COMMAND_BYTES,
         _plan_conf,
     )
 
-    mb = 1 << 20
-    with scoped_conf(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1MB",
+    kb = 1 << 10
+    with scoped_conf(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
                              "spark.sql.shuffle.partitions": "8"}):
         assert _plan_conf(spark, None) == {}
-        assert _plan_conf(spark, BROADCAST_THRESHOLD_BYTES) == {}
+        assert _plan_conf(spark, SMALL_COMMAND_BYTES) == {}
         parts = {n: _plan_conf(spark, n)["spark.sql.shuffle.partitions"]
-                 for n in (0, 1, mb, mb + 1, 3 * mb, 100 * mb)}
-        assert parts == {0: "1", 1: "1", mb: "1", mb + 1: "2", 3 * mb: "3", 100 * mb: "8"}
+                 for n in (0, 1, 16 * kb, 16 * kb + 1, 48 * kb, 1000 * kb)}
+        assert parts == {0: "1", 1: "1", 16 * kb: "1", 16 * kb + 1: "2", 48 * kb: "3",
+                         1000 * kb: "8"}
         assert _plan_conf(spark, 1)["spark.sql.adaptive.enabled"] == "false"
 
 
