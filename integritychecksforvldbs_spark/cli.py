@@ -82,8 +82,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--incremental-state-dir", default=None,
-        help="persist per-file CHECKTABLE partials here and scan only "
-        "files new since the last visit (append-mostly cost model)",
+        help="persist per-file CHECKTABLE partials in this driver-local "
+        "directory and scan only files new since the last visit "
+        "(append-mostly cost model)",
     )
     args = ap.parse_args(argv)
 

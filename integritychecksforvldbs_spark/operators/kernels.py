@@ -47,19 +47,22 @@ pushdown/column pruning reach the parquet reader.
 from __future__ import annotations
 
 import functools
-from collections.abc import Collection
+from collections.abc import Callable, Collection
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..expectations import ForeignKey, TableExpectations, expectations_for
 from ..functions.planutil import scoped_conf
+from ..plans.arrowio import read_swapped, write_swapped
 from ..sources.catalog import (
     DRIVER_SIDE_FOOTER_LIMIT,
     FileMeta,
     ObjectMeta,
+    _canon_file_path,
     footer_stats_df,
     probe_footers,
 )
@@ -277,16 +280,23 @@ def _plan_conf(spark: SparkSession, nbytes: int | None) -> dict[str, str]:
     return {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(n)}
 
 
+def _collect_frame(
+    spark: SparkSession, df: DataFrame, nbytes: int | None = None
+) -> list[dict[str, Any]]:
+    """Plan a built frame under the settings for its catalog byte
+    count, then run it; its rows.  The job runs after the scope has
+    restored the session: a job that outlives its lock timeout holds
+    no settings."""
+    with scoped_conf(spark, _plan_conf(spark, nbytes)):
+        df._jdf.queryExecution().executedPlan()
+    return [r.asDict() for r in df.collect()]
+
+
 def _collect_row(
     spark: SparkSession, text: str, tables: dict[str, DataFrame], nbytes: int | None = None
 ) -> dict[str, Any]:
-    """Plan one rendered command under its planned settings, then run
-    it; its one row.  The job runs after the scope has restored the
-    session: a job that outlives its lock timeout holds no settings."""
-    df = sql_frame(spark, text, tables)
-    with scoped_conf(spark, _plan_conf(spark, nbytes)):
-        df._jdf.queryExecution().executedPlan()
-    return df.collect()[0].asDict()
+    """One rendered command's one row, planned by :func:`_collect_frame`."""
+    return _collect_frame(spark, sql_frame(spark, text, tables), nbytes)[0]
 
 
 def _counter_errors(row: dict[str, Any]) -> list[str]:
@@ -1043,23 +1053,8 @@ def checktable_violations_oracle(table: str, exp: TableExpectations) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _canon_file_path(path: str) -> str:
-    """One canonical spelling for a data-file path — the join key of
-    the partials state.  The Hadoop listing says ``file:/x`` with raw
-    characters; ``input_file_name()`` says ``file:///x`` with
-    percent-encoding.  This (Python, listing side) and
-    ``_canon_file_path_expr`` (SQL, scan side) MUST stay in sync.
-    Non-``file:`` schemes pass through untouched (see the expr's
-    docstring for why decoding is file:-only)."""
-    if path.startswith("file:"):
-        path = path[len("file:"):]
-    while path.startswith("//"):
-        path = path[1:]
-    return path
-
-
 def _canon_file_path_expr(col: F.Column | None = None) -> F.Column:
-    """SQL twin of :func:`_canon_file_path` over ``input_file_name()``
+    """SQL twin of ``catalog._canon_file_path`` over ``input_file_name()``
     (default) or any path-bearing column: for ``file:`` URIs,
     percent-decode ('+' pre-escaped — URLDecoder would turn a literal
     plus into a space) then strip the scheme and slash-run.
@@ -1098,7 +1093,10 @@ def _partial_agg_exprs(
 
 
 def checktable_file_partials(
-    spark: SparkSession, paths: list[str], exp: TableExpectations
+    spark: SparkSession,
+    paths: list[str],
+    exp: TableExpectations,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Per-FILE partial CHECKTABLE aggregates: one row per data file.
 
@@ -1106,129 +1104,63 @@ def checktable_file_partials(
     snapshot), so a file's partial row never goes stale: persist the
     output and a daily CHECKTABLE over a 100 TB table re-scans only
     the files added since the last run.  Reads go through
-    ``load_table`` so NANOS/NTZ timestamp normalization matches the
-    full-kernel path.
+    ``load_table`` (with the whole table's ``schema`` when given) so
+    NANOS/NTZ timestamp normalization matches the full-kernel path.
     """
-    from ..sources.loader import load_table as _load_table
-
-    df = _load_table(spark, *paths)
+    df = load_table(spark, *paths, schema=schema)
     exprs = _partial_agg_exprs(exp, "embedding" in df.columns)
     return df.groupBy(_canon_file_path_expr().alias("file_path")).agg(
         *[F.expr(sql).alias(alias) for alias, sql in exprs]
     )
 
 
-def checktable_merge_partials(partials: DataFrame) -> DataFrame:
-    """Fold per-file partials into the table-level kernel row: SUM for
-    counters (exact — disjoint row sets), MIN/MAX for the
-    ``vector_len_*`` envelope columns."""
-    aggs = []
-    for c in partials.columns:
-        if c in ("file_path", "size"):
-            continue
-        if c.endswith("_min"):
-            aggs.append(F.min(c).cast("long").alias(c))
-        elif c.endswith("_max"):
-            aggs.append(F.max(c).cast("long").alias(c))
-        else:
-            aggs.append(F.sum(c).cast("long").alias(c))
-    return partials.agg(*aggs)
-
-
-def _incremental_file_partials(
-    spark: SparkSession,
+def _file_partials(
     state_path: str,
-    orig: dict[str, str],
-    live: dict[str, int],
-    expected_cols: list[str],
-    compute_fresh,
-):
-    """Shared state machinery for per-file partial kernels: read prior
-    state (schema-gated — a column-set change discards it), reconcile
-    on (path, size), compute partials for new files via
-    ``compute_fresh(new_orig_paths)``, synthesize all-zero counter rows
-    for files the scan produced no group for (0-row parquet files —
-    otherwise they re-list as "new" forever), and persist the merged
-    frame.  State is refreshed ONLY when the visit changed anything
-    (new files scanned or prior rows dropped); an idempotent visit is
-    read-only.
+    files: list[FileMeta],
+    fields: list[str],
+    compute_fresh: Callable[[list[FileMeta]], list[dict[str, Any]]],
+) -> tuple[list[dict[str, Any]], int]:
+    """Per-file partial rows of ``files``, reusing the driver-side state
+    at ``state_path``.  Returns ``(rows, files_scanned)``.
 
-    Returns ``(partials, files_scanned, commit)``.  The PERSISTED
-    ``partials`` frame is the caller's to unpersist; ``commit()``
-    performs the state swap (write-to-temp, rename the old state
-    ASIDE to ``.bak``, rename tmp in, drop ``.bak``) and must be
-    called only AFTER the caller has consumed ``partials`` — the
-    persist is best-effort, so until then the frame's lineage may
-    still read the old state files.  A crash inside the swap leaves
-    either the old state or a ``.bak``; the next visit restores the
-    ``.bak`` before reading, so "incremental" never silently degrades
-    to a full rescan.
+    A stored row is kept while its file is listed at the same size (a
+    changed size is an in-place rewrite); vanished files drop, and a
+    stored column set other than ``fields`` discards the state.  The
+    other files' rows come from ``compute_fresh(new_files)``, one row
+    per canonical ``file_path``; a file it has no row for holds 0 rows
+    and gets all-zero counters (NULL ``*_min``/``*_max``), so it never
+    lists as new again.  The state is rewritten, through the
+    crash-safe swap, only when this visit changed it: a visit with
+    nothing new is read-only.
     """
-    from ..sources.catalog import _fs_and_path, rename_or_raise
+    struct = T.StructType(
+        [T.StructField("file_path", T.StringType()), T.StructField("size", T.LongType())]
+        + [T.StructField(f, T.LongType()) for f in fields]
+    )
+    live = {_canon_file_path(f.path): f for f in files}
+    prior = read_swapped(state_path, struct) or []
+    rows = [r for r in prior if r["file_path"] in live and live[r["file_path"]].size == r["size"]]
+    dirty = len(rows) != len(prior)
+    known = {r["file_path"] for r in rows}
+    new = [(p, f) for p, f in live.items() if p not in known]
+    if new:
+        fresh = {r["file_path"]: r for r in compute_fresh([f for _, f in new])}
+        zero = {c: None if c.endswith(("_min", "_max")) else 0 for c in fields}
+        rows += [{**zero, **fresh.get(p, {}), "file_path": p, "size": f.size} for p, f in new]
+    if dirty or new:
+        write_swapped(rows, struct, state_path)
+    return rows, len(new)
 
-    fs, h_state = _fs_and_path(spark, state_path)
-    _, h_bak = _fs_and_path(spark, state_path + ".bak")
-    if not fs.exists(h_state) and fs.exists(h_bak):
-        rename_or_raise(fs, h_bak, h_state)  # recover a crashed swap
-    kept, known, prior_rows = None, set(), 0
-    try:
-        prior = spark.read.parquet(state_path)
-        if sorted(prior.columns) == sorted(expected_cols):
-            prior_rows = prior.count()
-            sizes = spark.createDataFrame(
-                [(p, sz) for p, sz in live.items()], "file_path string, size long"
-            )
-            kept = prior.join(sizes, ["file_path", "size"], "left_semi")
-            known = {r["file_path"] for r in kept.select("file_path").collect()}
-        # else: the partial column set changed since the state was
-        # written — fall through with empty `known` (full rescan)
-    except Exception:  # first run: no state yet
-        pass
 
-    new_paths = [orig[p] for p in live if p not in known]
-    parts = []
-    if kept is not None and known:
-        parts.append(kept)
-    if new_paths:
-        fresh = compute_fresh(new_paths)
-        new_canon = {p for p in live if p not in known}
-        sizes_new = spark.createDataFrame(
-            [(p, live[p]) for p in new_canon], "file_path string, size long"
-        )
-        # left join so a data file that produced NO group (0 rows)
-        # still gets a state row; counters fill 0, min/max stay NULL
-        joined = sizes_new.join(F.broadcast(fresh), "file_path", "left")
-        fill = {
-            c: 0
-            for c in expected_cols
-            if c not in ("file_path", "size")
-            and not (c.endswith("_min") or c.endswith("_max"))
-        }
-        parts.append(joined.fillna(fill))
-    partials = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    partials = partials.select(*expected_cols).persist()
-    partials.count()  # materialize BEFORE any state swap
-
-    state_dirty = bool(new_paths) or prior_rows != len(known)
-
-    def commit() -> None:
-        if not state_dirty:
-            return  # idempotent visit: read-only, nothing to swap
-        tmp_path = state_path + ".tmp"
-        partials.write.mode("overwrite").parquet(tmp_path)
-        _, h_tmp = _fs_and_path(spark, tmp_path)
-        if fs.exists(h_bak):
-            fs.delete(h_bak, True)
-        if fs.exists(h_state):
-            rename_or_raise(fs, h_state, h_bak)
-        # aborting here (rename returned false) leaves the .bak as the
-        # restorable installed copy; next visit recovers it and at
-        # worst degrades to a full rescan — never loses the state
-        rename_or_raise(fs, h_tmp, h_state)
-        if fs.exists(h_bak):
-            fs.delete(h_bak, True)
-
-    return partials, len(new_paths), commit
+def _fold(rows: list[dict[str, Any]], fields: list[str]) -> dict[str, Any]:
+    """Fold per-file partials into one row: SUM the counters (disjoint
+    row sets), MIN/MAX the ``*_min``/``*_max`` envelope; NULLs skipped."""
+    out = {}
+    for c in fields:
+        vals = [r[c] for r in rows if r[c] is not None]
+        agg = min if c.endswith("_min") else max if c.endswith("_max") else sum
+        out[c] = agg(vals) if vals else None
+    return out
 
 
 def run_checktable_incremental(
@@ -1239,73 +1171,56 @@ def run_checktable_incremental(
 ) -> KernelResult:
     """CHECKTABLE that scans only files NEW since the previous run.
 
-    State: a parquet table of per-file partial rows (plus the file
-    size they were computed at) at
+    State: one row per data file (its partial counters and the file
+    size they were computed at), kept on the driver's filesystem at
     ``{state_dir}/checktable_partials/{object}``.  Each visit:
 
     1. pin the file listing (path + size, the snapshot contract);
-    2. keep prior partials whose (path, size) BOTH still match — a
-       changed size means an in-place rewrite, so the file re-scans;
-       vanished files drop;
-    3. discard the whole state when its column set no longer matches
-       the current expectations (a rule was added/removed → the stored
-       partials are incomplete → full rescan rebuilds them);
-    4. compute partials for new files only (the incremental scan);
-    5. merge into the table row (SUM counters, MIN/MAX vector-length
+    2. reconcile it with the state (:func:`_file_partials`): keep rows
+       whose (path, size) BOTH still match, drop vanished files, and
+       discard the whole state when its column set no longer matches
+       the current expectations (a rule was added/removed);
+    3. compute partials for new files only, in one Spark job planned
+       from their catalog bytes (the incremental scan);
+    4. fold them in Python (SUM counters, MIN/MAX vector-length
        envelope); the ``pk_dup_rows`` probe — inherently global —
        re-runs as a NARROW scan of the key columns (column pruning
        reads only the PK bytes of the full table);
-    6. persist the updated partials for the next visit via
-       write-to-temp + swap, so the old state is never deleted before
-       its replacement exists (the prior partials frame is lazily
-       derived FROM the old state files).
+    5. swap the updated state in when it changed.
 
     Scale: a daily run on a 100 TB append-mostly table pays (wide scan
     of the day's new files) + (narrow PK scan), instead of a wide scan
     of everything — the same contract as the reference's time-budgeted
     re-check loop, made cheap enough to run every day.
     """
-    from ..sources.loader import load_table as _load_table
-
     exp = exp or expectations_for(obj.object_name)
-    state_path = f"{state_dir}/checktable_partials/{obj.object_name}"
-    orig = {_canon_file_path(f.path): f.path for f in obj.files}
-    live = {_canon_file_path(f.path): f.size for f in obj.files}
-    if not live:
+    if not obj.files:
         return KernelResult(
             "CHECKTABLE", obj.database_name, obj.object_name, False, {}, ["no data files"]
         )
-    probe_df = _load_table(spark, *orig.values())
-    expected_cols = ["file_path", "size"] + [
-        a for a, _ in _partial_agg_exprs(exp, "embedding" in probe_df.columns)
-    ]
+    df = load_table(spark, *[f.path for f in obj.files])
+    fields = [a for a, _ in _partial_agg_exprs(exp, "embedding" in df.columns)]
 
-    partials, n_scanned, commit = _incremental_file_partials(
-        spark,
-        state_path,
-        orig,
-        live,
-        expected_cols,
-        lambda paths: checktable_file_partials(spark, paths, exp),
+    def compute_fresh(new: list[FileMeta]) -> list[dict[str, Any]]:
+        fresh = checktable_file_partials(spark, [f.path for f in new], exp, df.schema)
+        return _collect_frame(spark, fresh, sum(f.size for f in new))
+
+    rows, n_scanned = _file_partials(
+        _canon_file_path(f"{state_dir}/checktable_partials/{obj.object_name}"),
+        obj.files, fields, compute_fresh,
     )
-    try:
-        row = checktable_merge_partials(partials).collect()[0].asDict()
-        if exp.primary_key:
-            # global dup probe on the pruned key columns only
-            keys = list(exp.primary_key)
-            pk = _load_table(spark, *orig.values()).select(*keys).dropna(subset=keys)
-            n_nonnull = row["n_rows"] - row["pk_null_rows"]
-            row["pk_dup_rows"] = int(n_nonnull - pk.distinct().count())
-        commit()  # swap state only after partials is fully consumed
-    finally:
-        partials.unpersist()
+    row = _fold(rows, fields)
+    if exp.primary_key:
+        text = f"SELECT {_pk_distinct(exp.primary_key, 'spark')} AS n FROM {{t_t}}"
+        distinct = _collect_row(spark, text, {"t": df}, obj.total_bytes)["n"]
+        row["pk_dup_rows"] = row["n_rows"] - row["pk_null_rows"] - distinct
 
     errors = _counter_errors(row)
     res = KernelResult(
         "CHECKTABLE", obj.database_name, obj.object_name, not errors, row, errors
     )
     res.metrics["files_scanned"] = n_scanned
-    res.metrics["files_reused"] = len(live) - n_scanned
+    res.metrics["files_reused"] = len(obj.files) - n_scanned
     return res
 
 
@@ -1324,59 +1239,44 @@ def table_checksum_incremental(
 
     The content checksum is a SUM of row hashes mod 2^62 — modular
     addition is associative, so per-file (n_rows, checksum) partials
-    merge exactly: ``SUM(partial) % M`` equals the full-scan value.
-    Shares :func:`_incremental_file_partials`'s state contract with
-    the incremental CHECKTABLE: (path, size) reconciliation,
+    merge exactly: ``SUM(partial) % M`` equals the full-scan value
+    (per-file checksums are non-negative, so Python's ``%`` is
+    Spark's).  Shares :func:`_file_partials`'s state contract with the
+    incremental CHECKTABLE: (path, size) reconciliation,
     loader-normalized reads, zero-row-file synthesis, read-only
-    idempotent visits, temp-swap state writes.  The state path embeds
+    idempotent visits, swapped state writes.  The state path embeds
     a fingerprint of ``cols`` — partials hashed over a different
     column list are a different state, never silently reused.  A
     daily replica-divergence probe on an append-mostly 100 TB table
-    costs one scan of the day's files.
+    costs one scan of the day's files, and a day with no new file
+    starts no Spark job.
 
     Returns ``{"n_rows", "checksum", "files_scanned", "files_reused"}``.
     """
     import hashlib
 
-    from ..sources.loader import load_table as _load_table
-
     cols_sig = hashlib.md5(",".join(cols).encode()).hexdigest()[:12]
-    state_path = (
-        f"{state_dir}/checksum_partials/{obj.object_name}/{cols_sig}"
-    )
-    orig = {_canon_file_path(f.path): f.path for f in obj.files}
-    live = {_canon_file_path(f.path): f.size for f in obj.files}
-    if not live:
+    if not obj.files:
         return {"n_rows": 0, "checksum": 0, "files_scanned": 0, "files_reused": 0}
-    expected_cols = ["file_path", "size", "n_rows", "checksum"]
     n_rows_sql, checksum_sql = _checksum_exprs(cols, "spark")
 
-    def compute_fresh(paths):
-        return (
-            _load_table(spark, *paths)
+    def compute_fresh(new: list[FileMeta]) -> list[dict[str, Any]]:
+        schema = load_table(spark, *[f.path for f in obj.files]).schema
+        fresh = (
+            load_table(spark, *[f.path for f in new], schema=schema)
             .groupBy(_canon_file_path_expr().alias("file_path"))
-            .agg(
-                F.expr(n_rows_sql).alias("n_rows"),
-                F.expr(checksum_sql).alias("checksum"),
-            )
+            .agg(F.expr(n_rows_sql).alias("n_rows"), F.expr(checksum_sql).alias("checksum"))
         )
+        return _collect_frame(spark, fresh, sum(f.size for f in new))
 
-    partials, n_scanned, commit = _incremental_file_partials(
-        spark, state_path, orig, live, expected_cols, compute_fresh
+    rows, n_scanned = _file_partials(
+        _canon_file_path(f"{state_dir}/checksum_partials/{obj.object_name}/{cols_sig}"),
+        obj.files, ["n_rows", "checksum"], compute_fresh,
     )
-    try:
-        row = partials.agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.expr(
-                f"CAST(SUM(CAST(checksum AS DECIMAL(38,0))) % {_CHECKSUM_MOD} AS BIGINT)"
-            ).alias("checksum"),
-        ).collect()[0]
-        commit()  # swap state only after partials is fully consumed
-    finally:
-        partials.unpersist()
+    row = _fold(rows, ["n_rows", "checksum"])
     return {
-        "n_rows": int(row["n_rows"]),
-        "checksum": int(row["checksum"]),
+        "n_rows": row["n_rows"],
+        "checksum": row["checksum"] % _CHECKSUM_MOD,
         "files_scanned": n_scanned,
-        "files_reused": len(live) - n_scanned,
+        "files_reused": len(obj.files) - n_scanned,
     }

@@ -404,10 +404,8 @@ def build_bm25_index(
     """
     files = None
     if corpus_path is not None:
-        from integritychecksforvldbs_spark.operators.kernels import (
-            _canon_file_path,
-        )
         from integritychecksforvldbs_spark.sources.catalog import (
+            _canon_file_path,
             list_parquet_files,
         )
 
@@ -439,7 +437,7 @@ def refresh_bm25_index(
     ``"appended"``, or ``"rebuilt"``.
 
     Reconciliation mirrors the incremental-CHECKTABLE state contract
-    (``kernels._incremental_file_partials``): a corpus file is KNOWN
+    (``kernels._file_partials``): a corpus file is KNOWN
     when both its canonical path and size match the manifest.  The
     append-only contract: new files carry NEW doc_ids (the same
     assumption segmented text indexes make); a vanished or
@@ -447,10 +445,8 @@ def refresh_bm25_index(
     the refresh falls back to a full rebuild — correct for every
     mutation, incremental for the append-mostly common case.
     """
-    from integritychecksforvldbs_spark.operators.kernels import (
-        _canon_file_path,
-    )
     from integritychecksforvldbs_spark.sources.catalog import (
+        _canon_file_path,
         list_parquet_files,
     )
     from integritychecksforvldbs_spark.sources.loader import load_table

@@ -19,6 +19,7 @@ import logging
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
+from urllib.parse import urlsplit
 
 from pyspark.sql import SparkSession
 
@@ -91,10 +92,11 @@ class CheckParams:
     check_commands: str = "CHECKDB"
     objects: str | None = None  # DIC @Objects 3-part DSL (DIC:645-692)
     filegroups: str | None = None  # DIC @FileGroups 2-part DSL (DIC:593-639)
-    # extension: directory for per-file CHECKTABLE partials; when set,
-    # CHECKTABLE scans only files new since the last visit and merges
-    # persisted partials (run_checktable_incremental) — the daily-run
-    # cost model for append-mostly VLDBs
+    # extension: driver-local directory for per-file CHECKTABLE
+    # partials; when set, CHECKTABLE scans only files new since the
+    # last visit and merges persisted partials
+    # (run_checktable_incremental) — the daily-run cost model for
+    # append-mostly VLDBs
     incremental_state_dir: str | None = None
 
     def families(self) -> list[str]:
@@ -163,6 +165,15 @@ class CheckParams:
         if self.lock_message_severity not in (10, 16):  # CE:118-121
             errors.append(
                 "The value for the parameter @LockMessageSeverity is not supported."
+            )
+        if self.incremental_state_dir and urlsplit(self.incremental_state_dir).scheme not in (
+            "", "file"
+        ):
+            # the partials live on the driver's filesystem, like the
+            # ledger and the command log
+            errors.append(
+                "The value for the parameter incremental_state_dir is not supported."
+                " Use a local path or a file: URI."
             )
         if self.databases is not None and self.availability_groups is not None:
             errors.append(  # DIC:584-587

@@ -4,12 +4,13 @@ Schema mirrors IntegrityChecks_VLDB.sql:41-65 (FIXTURES.md §B
 ``check_objects``).  The ledger is metadata-sized (one row per table,
 not per data row), so it lives in driver memory during a run and is
 persisted as a directory holding one parquet file, written by pyarrow
-on the driver (no Spark job) into a temp directory that is then
-renamed over the old one — the single-writer read-modify-overwrite
-plan from SURVEY §7.4 risk 1.  A crash between the swap's two renames
-leaves the previous ledger at ``<path>.old``, which the next load
-falls back to.  Spark (``spark.read.schema(STATE_SCHEMA)``) and DuckDB
-(``read_parquet``) read the file; ledgers written by Spark load too.
+on the driver (no Spark job) through ``arrowio.write_swapped``: a temp
+directory renamed over the old one — the single-writer
+read-modify-overwrite plan from SURVEY §7.4 risk 1.  A crash between
+the swap's two renames leaves the previous ledger at ``<path>.old``,
+which the next load falls back to.  Spark
+(``spark.read.schema(STATE_SCHEMA)``) and DuckDB (``read_parquet``)
+read the file; ledgers written by Spark load too.
 A Delta ``MERGE INTO`` drop-in is the multi-writer upgrade path.
 
 Semantics preserved exactly:
@@ -28,16 +29,13 @@ Semantics preserved exactly:
 from __future__ import annotations
 
 import math
-import os
-import shutil
-import tempfile
 from dataclasses import asdict, dataclass
 from datetime import date, datetime
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from .arrowio import read_rows, write_rows
+from .arrowio import read_swapped, write_swapped
 
 EPOCH_DATE = date(1900, 1, 1)  # IC:62 default
 
@@ -100,40 +98,16 @@ class StateStore:
         return (db, schema, obj)
 
     def _load(self) -> None:
-        if not self.path:
-            return
-        path = self.path if os.path.exists(self.path) else self.path + ".old"
-        if not os.path.exists(path):
-            return
-        try:
-            rows = read_rows(path, STATE_SCHEMA)
-        except Exception:
-            return
-        for r in rows:
+        for r in read_swapped(self.path, STATE_SCHEMA) or []:
             row = StateRow(**r)
             self.rows[self._key(row.database_name, row.schema, row.object_name)] = row
             self._next_id = max(self._next_id, row.id + 1)
 
     def save(self) -> None:
-        """Atomic overwrite: write to a temp dir, then swap (single
-        writer; SURVEY §7.4 risk 1)."""
-        if not self.path:
-            return
-        old = self.path + ".old"
-        tmp = tempfile.mkdtemp(dir=os.path.dirname(self.path) or ".", prefix=".state_tmp_")
-        try:
-            write_rows(
-                [asdict(r) for r in self.rows.values()], STATE_SCHEMA,
-                os.path.join(tmp, "part-00000.parquet"),
-            )
-            if os.path.exists(self.path):
-                shutil.rmtree(old, ignore_errors=True)  # left by a crash after the swap
-                os.rename(self.path, old)
-            os.rename(tmp, self.path)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        """Atomic overwrite through the crash-safe swap (single writer;
+        SURVEY §7.4 risk 1)."""
+        if self.path:
+            write_swapped([asdict(r) for r in self.rows.values()], STATE_SCHEMA, self.path)
 
     # ------------------------------------------------------------------
     # MERGE (IC:454-484)

@@ -130,7 +130,7 @@ def bloom_prune(
     # input_file_name says file:///x, the listing says file:/x — the
     # index's `file` column is already canonical (built through
     # _canon_file_path_expr), so normalize only the listing side
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path as _norm,
     )
 
@@ -183,7 +183,7 @@ def bloom_read_many(
     (index rows × values), instead of ~5 driver round-trips per value
     (guide §5: the driver should do almost no work; a 4-key point-
     lookup union paid ~20 tiny jobs before)."""
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path as _norm,
     )
 

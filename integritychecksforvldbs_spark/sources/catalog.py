@@ -80,6 +80,21 @@ def _fs_and_path(spark: SparkSession, path: str):
     return fs, hpath
 
 
+def _canon_file_path(path: str) -> str:
+    """One canonical spelling for a data-file path.  The Hadoop listing
+    says ``file:/x`` with raw characters, callers often hold plain
+    ``/x``, and ``input_file_name()`` says ``file:///x`` with
+    percent-encoding; this (Python, listing side) and
+    ``kernels._canon_file_path_expr`` (SQL, scan side) MUST stay in
+    sync.  Non-``file:`` schemes pass through untouched (see the
+    expr's docstring for why decoding is file:-only)."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+    while path.startswith("//"):
+        path = path[1:]
+    return path
+
+
 def rename_or_raise(fs, src, dst) -> None:
     """Hadoop ``FileSystem.rename`` returns ``False`` on failure
     instead of raising (dst exists, src vanished, cross-FS move…).
@@ -219,7 +234,9 @@ def list_objects(spark: SparkSession, database_name: str, db_path: str) -> list[
 
     Analogue of the per-DB dynamic-SQL catalog scan (IC:429-438): every
     ``<name>.parquet`` file or parquet-holding subdirectory is a table
-    ('U'); registered temp views would be 'V'.
+    ('U') named without the ``.parquet`` suffix, so a ``<name>.parquet/``
+    directory gets ``<name>``'s expectations; registered temp views
+    would be 'V'.
     """
     fs, hpath = _fs_and_path(spark, db_path)
     objs: list[ObjectMeta] = []
@@ -228,21 +245,15 @@ def list_objects(spark: SparkSession, database_name: str, db_path: str) -> list[
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
         full = st.getPath().toString()
+        table = name[: -len(".parquet")] if name.endswith(".parquet") else name
         if st.isDirectory():
             files = list_parquet_files(spark, full)
             if files:
-                objs.append(
-                    ObjectMeta(database_name, "main", name, "U", full, files)
-                )
-        elif name.endswith(".parquet"):
+                objs.append(ObjectMeta(database_name, "main", table, "U", full, files))
+        elif table != name:
             objs.append(
                 ObjectMeta(
-                    database_name,
-                    "main",
-                    name[: -len(".parquet")],
-                    "U",
-                    full,
-                    [FileMeta(full, st.getLen())],
+                    database_name, "main", table, "U", full, [FileMeta(full, st.getLen())]
                 )
             )
     objs.sort(key=lambda o: (o.schema_name, o.object_name))
@@ -260,20 +271,10 @@ def list_filegroups(
     PRIMARY-first then by name, mirroring the reference's
     ``CASE WHEN name = 'PRIMARY' THEN 1 ELSE 0 END DESC, name``.
     """
-    def _norm(p: str) -> str:
-        # the Hadoop listing says file:/x while callers often hold the
-        # plain /x spelling — compare scheme-insensitively for local
-        # paths (non-local schemes pass through untouched)
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-        return p
-
     groups: dict[str, list[FileMeta]] = {}
-    prefix = _norm(obj.path).rstrip("/") + "/"
+    prefix = _canon_file_path(obj.path).rstrip("/") + "/"
     for f in obj.files:
-        fp = _norm(f.path)
+        fp = _canon_file_path(f.path)
         rest = fp[len(prefix):] if fp.startswith(prefix) else ""
         if "/" in rest:
             groups.setdefault(rest.split("/", 1)[0], []).append(f)

@@ -101,7 +101,7 @@ def dv_root(table_path: str) -> str:
 
 def canon_metadata_path_expr() -> F.Column:
     """Canonical spelling of ``_metadata.file_path`` — the SQL twin of
-    :func:`~..operators.kernels._canon_file_path` (see its docstring
+    :func:`~.catalog._canon_file_path` (see its docstring
     for the file:-only decode rationale), over the scan's metadata
     column instead of ``input_file_name()`` (the DV join needs the
     row's OWN file even under joins/unions where input_file_name is
@@ -330,7 +330,7 @@ def _inline_dead_pred(dvs: dict[str, dict], fcol: str, rcol: str):
     set is too big to inline (see :func:`inline_ranges`)."""
     import functools
 
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path,
     )
 

@@ -88,7 +88,7 @@ def _files_with_header(
     """Canonical paths of the files whose first line IS the header —
     a metadata-scale sniff (first line per file), driver-side for few
     files, distributed past :data:`SNIFF_DRIVER_LIMIT`."""
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path,
     )
 
@@ -117,8 +117,10 @@ def _drop_headers(
     sniffed (metadata-sized) file sets, spelled on whichever of
     header/headerless is the minority so the predicate stays small."""
     from integritychecksforvldbs_spark.operators.kernels import (
-        _canon_file_path,
         _canon_file_path_expr,
+    )
+    from integritychecksforvldbs_spark.sources.catalog import (
+        _canon_file_path,
     )
 
     all_files = {_canon_file_path(f) for f in lines.inputFiles()}

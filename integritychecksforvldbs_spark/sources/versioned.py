@@ -1917,7 +1917,7 @@ def _touched_files(
     never even PLANS a scan of provably-unmatchable files).  Rows a
     deletion vector already marks dead never count as matches (they
     are not in the table)."""
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path,
     )
 
@@ -2544,7 +2544,7 @@ def _fold_dv_entries(
     physical row is FULLY DEAD (dropped from the file list — no DV
     needed, and vacuum reclaims its bytes), the rest get superseding
     DV artifacts written.  Returns ``(removed_files, add_dvs)``."""
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path,
     )
     from integritychecksforvldbs_spark.sources.deletion_vectors import (
@@ -3351,7 +3351,7 @@ def _carry_over_index(
     audited bounded pattern: one string per file, metadata-plane."""
     from pyspark.sql import functions as F
 
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path,
     )
 
@@ -3392,7 +3392,7 @@ def build_bloom(
     build."""
     from pyspark.sql import functions as F
 
-    from integritychecksforvldbs_spark.operators.kernels import (
+    from integritychecksforvldbs_spark.sources.catalog import (
         _canon_file_path,
     )
     from integritychecksforvldbs_spark.sources.bloomskip import (
@@ -3522,8 +3522,10 @@ def _bloom_prune_files(
         from pyspark.sql import functions as F
 
         from integritychecksforvldbs_spark.operators.kernels import (
-            _canon_file_path,
             _canon_file_path_expr,
+        )
+        from integritychecksforvldbs_spark.sources.catalog import (
+            _canon_file_path,
         )
         from integritychecksforvldbs_spark.sources.bloomskip import (
             _probe_positions,

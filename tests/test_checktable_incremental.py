@@ -270,19 +270,24 @@ def test_zero_row_file_settles_into_state(spark, doc_dir, tmp_path):
 
 def test_idempotent_visit_is_read_only(spark, doc_dir, tmp_path):
     """A visit that scans nothing and drops nothing must not rewrite
-    the state parquet (no delete/rename window on no-op days)."""
+    the state parquet (no delete/rename window on no-op days).  The
+    state file's inode and mtime tell a rewrite apart even though
+    every write uses the same file name."""
     import glob
+    import os
+
+    def stamp():
+        return [
+            (p, os.stat(p).st_ino, os.stat(p).st_mtime_ns)
+            for p in sorted(glob.glob(f"{state}/checktable_partials/documents/*.parquet"))
+        ]
 
     state = str(tmp_path / "state")
     kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
-    state_files = sorted(
-        glob.glob(f"{state}/checktable_partials/documents/part-*.parquet")
-    )
+    state_files = stamp()
+    assert state_files
     kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
-    assert (
-        sorted(glob.glob(f"{state}/checktable_partials/documents/part-*.parquet"))
-        == state_files
-    )
+    assert stamp() == state_files
 
 
 def test_checksum_state_is_per_column_list(spark, doc_dir, tmp_path):
@@ -306,17 +311,168 @@ def test_checksum_state_is_per_column_list(spark, doc_dir, tmp_path):
 
 def test_crashed_swap_recovers_from_bak(spark, doc_dir, tmp_path):
     """A crash between rename-aside and rename-in leaves the state
-    missing and a .bak behind; the next visit must restore the .bak
-    and stay incremental (0 files re-scanned), not full-rescan."""
+    missing and its .old copy behind; the next visit must read the
+    .old copy and stay incremental (0 files re-scanned), not
+    full-rescan."""
     import os
 
     state = str(tmp_path / "state")
     kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
     sp = f"{state}/checktable_partials/documents"
-    os.rename(sp, sp + ".bak")  # the mid-swap crash window
+    os.rename(sp, sp + ".old")  # the mid-swap crash window
     res = kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
     assert res.metrics["files_scanned"] == 0
     assert res.metrics["files_reused"] == 4
     full = _full_row(spark, doc_dir)
     for k, v in full.items():
         assert res.metrics[k] == v, k
+
+
+def _visit_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"incremental-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "incremental visit")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_visit_job_counts(spark, doc_dir, tmp_path):
+    """State I/O starts no Spark job: an append visit runs the new
+    files' partials, the PK probe and one schema read; an idle visit
+    only the last two; an idle checksum visit nothing at all."""
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    state = str(tmp_path / "state")
+    kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
+    kernels.table_checksum_incremental(spark, _obj(spark, doc_dir), cols, state)
+    spark.createDataFrame(
+        [(10_000_003, "one more", "en", "web", 8)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("append").parquet(doc_dir)
+
+    res, jobs = _visit_jobs(
+        spark, lambda: kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
+    )
+    assert res.metrics["files_scanned"] == 1 and 1 <= jobs <= 3
+    res, jobs = _visit_jobs(
+        spark, lambda: kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), state)
+    )
+    assert res.metrics["files_scanned"] == 0 and jobs <= 2
+    r, _ = _visit_jobs(
+        spark, lambda: kernels.table_checksum_incremental(spark, _obj(spark, doc_dir), cols, state)
+    )
+    assert r["files_scanned"] == 1
+    r, jobs = _visit_jobs(
+        spark, lambda: kernels.table_checksum_incremental(spark, _obj(spark, doc_dir), cols, state)
+    )
+    assert r["files_scanned"] == 0 and jobs == 0
+
+
+@pytest.mark.parametrize("seed, composite", [(1, False), (2, True), (3, False)])
+def test_seeded_walk_matches_full_kernel_and_duckdb(spark, tmp_path, seed, composite):
+    """A seeded walk over appends, in-place rewrites (a size change),
+    deletions, 0-row files and duplicate keys.  After every visit the
+    incremental row equals the full kernel and the DuckDB oracle, the
+    incremental checksum equals the DuckDB checksum, and exactly the
+    new or rewritten files were scanned."""
+    import os
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from integritychecksforvldbs_spark.expectations import TableExpectations
+
+    rng = random.Random(seed)
+    base = expectations_for("documents")
+    exp = TableExpectations(
+        table="documents",
+        primary_key=["doc_id", "lang"] if composite else ["doc_id"],
+        not_null=base.not_null,
+        domain_rules=base.domain_rules,
+    )
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),
+                        ("source", pa.string()), ("n_chars", pa.int64())])
+    d = tmp_path / "documents"
+    d.mkdir()
+    state = str(tmp_path / "state")
+    names = iter(f"part-{i:05d}.parquet" for i in range(1000))
+
+    def rows(n):
+        out = []
+        for _ in range(n):
+            text = rng.choice([None, "ab", "abc", "hello"])
+            out.append({
+                "doc_id": rng.choice([None] + list(range(12))),  # duplicates and NULLs
+                "text": text,
+                "lang": rng.choice([None, "en", "de", "xyz"]),
+                "source": "web",
+                "n_chars": rng.choice([len(text or ""), 99]),
+            })
+        return out
+
+    def write(name, n):
+        pq.write_table(pa.Table.from_pylist(rows(n), schema), str(d / name))
+
+    for _ in range(3):
+        write(next(names), rng.randint(1, 6))
+    kernels.run_checktable_incremental(spark, _obj(spark, str(d)), state, exp)
+    kernels.table_checksum_incremental(spark, _obj(spark, str(d)), cols, state)
+    con = duckdb.connect()
+    try:
+        for step in range(8):
+            files = sorted(os.listdir(d))
+            op = rng.choice(["append", "append", "rewrite", "delete", "empty"])
+            if op == "delete" and len(files) < 2:
+                op = "append"
+            changed = 0
+            if op == "append":
+                write(next(names), rng.randint(1, 6))
+                changed = 1
+            elif op == "empty":
+                write(next(names), 0)
+                changed = 1
+            elif op == "rewrite":
+                victim = rng.choice(files)
+                size = os.path.getsize(d / victim)
+                while os.path.getsize(d / victim) == size:
+                    write(victim, rng.randint(1, 8))
+                changed = 1
+            else:
+                os.remove(d / rng.choice(files))
+
+            obj = _obj(spark, str(d))
+            res = kernels.run_checktable_incremental(spark, obj, state, exp)
+            chk = kernels.table_checksum_incremental(spark, obj, cols, state)
+            assert res.metrics["files_scanned"] == changed == chk["files_scanned"], (step, op)
+            full = kernels.sql_frame(
+                spark, kernels.checktable_sql(exp), {"documents": load_table(spark, str(d))}
+            ).collect()[0].asDict()
+            con.execute(
+                f"CREATE OR REPLACE VIEW documents AS SELECT * FROM read_parquet('{d}/*.parquet')"
+            )
+            cur = con.execute(kernels.checktable_oracle_sql("documents", exp))
+            oracle = dict(zip([c[0] for c in cur.description], cur.fetchone()))
+            assert {k: res.metrics[k] for k in full} == full == oracle, (step, op)
+            n_rows, checksum = con.execute(
+                kernels.table_checksum_oracle("documents", cols)
+            ).fetchone()
+            assert (chk["n_rows"], chk["checksum"]) == (n_rows, checksum), (step, op)
+    finally:
+        con.close()
+
+
+def test_file_uri_state_dir_is_the_local_path(spark, doc_dir, tmp_path):
+    """A ``file:`` state dir names the same local directory as its
+    plain path."""
+    kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), f"file://{tmp_path}/state")
+    res = kernels.run_checktable_incremental(spark, _obj(spark, doc_dir), str(tmp_path / "state"))
+    assert res.metrics["files_scanned"] == 0

@@ -609,6 +609,36 @@ def test_updateability_validation_and_discovery(spark, tmp_path):
     assert "@Updateability = 'READ_ONLY'" in checker._parameters_string()
 
 
+def test_parquet_suffixed_directory_table_gets_its_expectations(spark, tmp_path):
+    """A ``region.parquet/`` directory table lists as ``region``, so
+    CHECKTABLE runs region's PK and NOT NULL counters on it, not only
+    the row count."""
+    import shutil
+
+    base = tmp_path / "base"
+    (base / "db" / "region.parquet").mkdir(parents=True)
+    shutil.copy(f"{BASE}/sf0.001/region.parquet", base / "db" / "region.parquet" / "part-0.parquet")
+    assert [o.object_name for o in list_objects(spark, "db", str(base / "db"))] == ["region"]
+    checker = IntegrityChecker(
+        spark, str(base), str(tmp_path / "s.parquet"), str(tmp_path / "l.parquet"),
+        CheckParams(check_commands="CHECKTABLE", snapshot_path=None),
+    )
+    (outcome,) = checker.run().outcomes
+    assert outcome.spec.object == "region"
+    m = outcome.result.metrics
+    assert m["n_rows"] == 5 and m["pk_null_rows"] == 0 and m["pk_dup_rows"] == 0
+    assert m["null_r_name"] == 0
+
+
+def test_incremental_state_dir_must_be_driver_local(tmp_path):
+    """The partials live on the driver's filesystem: a remote URI is
+    refused; a local path and a ``file:`` URI are accepted."""
+    with pytest.raises(ValueError, match="incremental_state_dir is not supported"):
+        CheckParams(incremental_state_dir="hdfs://nn:8020/check_state").validate()
+    CheckParams(incremental_state_dir=str(tmp_path / "state")).validate()
+    CheckParams(incremental_state_dir=f"file://{tmp_path}/state").validate()
+
+
 def _log_row(db: str, command_type: str, start: datetime, error_number: int) -> dict:
     return {
         "database_name": db, "command": "DBCC CHECKDB", "command_type": command_type,
