@@ -426,7 +426,6 @@ def _versioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     from integritychecksforvldbs_spark.sources import versioned
 
     path = _mirror_path(sf_dir, "orders_versioned")
-    # layout-agnostic fixture probe (atomic vN.json or legacy vN/ dir)
     if versioned._read_manifest(path, 2) is None:
         import shutil
 
@@ -1555,7 +1554,6 @@ def _rollup_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     src = _mirror_path(sf_dir, "orders_rollup_src")
     rp = _mirror_path(sf_dir, "orders_rollup")
-    # layout-agnostic fixture probe (atomic vN.json or legacy vN/ dir)
     if versioned._read_manifest(rp, 2) is None:
         import shutil
 
@@ -1594,7 +1592,6 @@ def _versioned_merge_path(spark: SparkSession, sf_dir: str) -> str:
     from integritychecksforvldbs_spark.sources import versioned
 
     path = _mirror_path(sf_dir, "customer_versioned_merge")
-    # layout-agnostic fixture probe (atomic vN.json or legacy vN/ dir)
     if versioned._read_manifest(path, 2) is None:
         import shutil
 
@@ -4000,10 +3997,10 @@ _CORRUPTED_DOCS_SQL = (
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Contract queries in CURATED order: the driver's correctness
-    harness records the first 50 entries (round-3 evidence), so the
-    first 50 cover every operator family exactly once — merged-variant
-    gates where families have redundant demos — and the individual
-    variants follow after the cap for bench.py / local verification."""
+    harness records only the first 50 entries, so every operator
+    family keeps a row in that head — merged-variant gates where
+    families have redundant demos — and the individual variants
+    follow after the cap for bench.py / local verification."""
     from integritychecksforvldbs_spark.operators import curation
     from integritychecksforvldbs_spark.operators.kernels import (
         checktable_violations_df,
@@ -4043,16 +4040,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["dup_detection_having"] = _q_dup_detection
     out["like_selection"] = _q_like_selection
     out["pricing_cube"] = _q_pricing_cube
-    # r5 rotation: events_running_total (windows also gated by
-    # window_suite) moved past the cap for the SCD2 family gate
     out["scd2_customer_merge"] = _q_scd2_customer
     out["join_revenue_top10"] = _q_join_revenue
     out["events_funnel"] = _q_funnel
     out["exists_late_orders"] = _q_exists_late_orders
-    # r6 rotation: antijoin_segments (anti-join family still gated by
-    # set_ops_suite + exists_late_orders; its 0-row result made it the
-    # weakest compare) moved past the cap for the new quarantined-
-    # ingestion family gate
     out["ingest_csv_roundtrip"] = _q_ingest_csv_roundtrip
     out["user_gaps"] = _q_user_gaps
     out["props_parse"] = _q_props_parse
@@ -4065,8 +4056,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["dedup_exact"] = lambda spark, sf: dedup.exact_dup_groups(
         _docs_with_chunk_twins(spark, sf)
     )
-    # r5 rotation: dedup_pairs (MinHash LSH also gated by
-    # curation_increment) moved past the cap for the zone-map gate
     out["zonemap_pruned_scan"] = _q_zonemap_pruned
     out["dedup_simhash_both"] = _q_simhash_both
     out["dedup_embedding_both"] = _q_dedup_embedding_both
@@ -4079,7 +4068,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["text_winnow"] = lambda spark, sf: text.winnow_fingerprints(
         _fan_out_small_scan(_load(spark, sf, "documents").select("doc_id", "text"))
     )
-    out["text_rarity_repetition"] = _q_text_rarity_repetition
 
     # ---- deterministic sampling ----------------------------------
     out["sample_suite"] = _q_sample_suite
@@ -4088,16 +4076,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["multimodal_suite"] = _q_multimodal_suite
 
     # ---- streaming kernels, batch-equivalent form (§2.10 ext.) --- 40-46
-    # r5 rotation: events_hourly_counts (its aggregation grain is
-    # recomputed inside events_volume_anomalies) moved past the cap
-    # for the analytics-family gate
-    # strict-progression conversion funnel (view -> click -> purchase),
-    # per-user sorted-array fold == the oracle's sequential min-chain
-    out["events_conversion_funnel"] = lambda spark, sf: (
-        analytics.conversion_funnel(
-            _load(spark, sf, "events"), ["view", "click", "purchase"]
-        )
-    )
     # freshness summary + late-data volume share the per-event_type
     # grain → one joined gate (variants stay registered past the cap)
     def _q_freshness_suite(spark: SparkSession, sf: str) -> DataFrame:
@@ -4120,8 +4098,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ev, temporal.error_incident_windows(ev)
         )
 
-    out["events_incident_counts"] = _q_incident_counts
-
     # ---- corpus curation (north star) ----------------------------
     # end-to-end funnel: quality -> LSH dedup survivors -> benchmark
     # decontamination -> per-source cap, one row per stage; subsumes
@@ -4129,101 +4105,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["curation_funnel"] = lambda spark, sf: curation.curate_funnel(
         _load(spark, sf, "documents"), n=5, cap_k=20
     )
-    # r5 rotation: curation_mixture (allocation also exercised inside
-    # curation_split_budget's budget_fill) moved past the cap for the
-    # BM25 retrieval gate
     out["search_bm25"] = _q_search_bm25
     out["curation_split_budget"] = _q_curation_split_budget
     out["curation_pii_scrub"] = lambda spark, sf: curation.pii_scrub(
         _pii_documents(_load(spark, sf, "documents"))
     )
     out["curation_increment"] = _q_dedup_increment
-    # r6 rotations (late-round): events_conversion_funnel joined the
-    # head for the analytics family, so events_volume_anomalies and
-    # search_bm25_refreshed (families still gate-covered by the
-    # funnel row and search_bm25) move past the cap — freeing slots
-    # for the PNG real-decode chain and the round's new versioned
-    # (mini-lakehouse) family, gated by its MERGE query
-    out["multimodal_png_roundtrip"] = _q_multimodal_png
-    out["versioned_merge_customers"] = _q_versioned_merge
-    # r9 rotations: the round's flagship file-scoped-DML surface joins
-    # the head (VERDICT r8 next-round #8) — versioned_update_where
-    # (replace-delta UPDATE) and versioned_dv_delete (merge-on-read
-    # deletion vectors, the r9 headline).  Freed slots:
-    # heavy_hitters_orders (profiling family still gated by
-    # profile_documents + skew_profile_lineitem) and
-    # grouping_sets_pricing (grouping-analytics family still gated by
-    # pricing_cube — CUBE is grouping sets); both stay registered
-    # below the cap.
-    # r10 rotation: versioned_merge_when (conditional three-branch
-    # MERGE through the SQL bridge — the reference's own inventory
-    # MERGE shape, IC:454-484) takes the head slot of
-    # versioned_update_where, whose replace-delta UPDATE semantics the
-    # new row's matched-update branch also exercises;
-    # versioned_update_where stays registered below the cap.
+
+    # ---- versioned tables (mini lakehouse) ----------------------- 43-48
     out["versioned_merge_when"] = _q_versioned_merge_when
     out["versioned_dv_delete"] = _q_versioned_dv_delete
-    # r10 wave-5 rotation: versioned_schema_evolution (ALTER TABLE
-    # rename/add/drop through the column mapping, the round's new
-    # format surface) takes the head slot of versioned_merge_customers
-    # — the MERGE family stays gated by versioned_merge_when, whose
-    # three-branch form subsumes the upsert-all shape; the upsert row
-    # stays registered below the cap.
     out["versioned_schema_evolution"] = _q_versioned_schema_evolution
-    del out["versioned_merge_customers"]
-    # r11 centerpiece: hive partition-column layout — the gate row
-    # rides the head so the driver records it (events_attribution,
-    # one of the events family's eight head rows, moved past the cap)
     out["versioned_partitioned_prune"] = _q_versioned_partitioned
-    # r12 centerpiece: SQL front-door pruning for alias-qualified and
-    # IN-list predicates (VERDICT r11 #1) — takes the head slot of
-    # events_conversion_funnel (the funnel family stays gated by
-    # events_funnel in the head; the conversion variant re-registers
-    # below the cap)
-    del out["events_conversion_funnel"]
-    out["versioned_sql_in_prune"] = _q_versioned_sql_in_prune
-    # r12 #2: bucket(n, col) hidden partitioning — takes the head
-    # slot of multimodal_png_roundtrip (the multimodal family stays
-    # gated by multimodal_suite; the PNG roundtrip re-registers below
-    # the cap)
-    del out["multimodal_png_roundtrip"]
     out["versioned_bucket_point"] = _q_versioned_bucket_point
-    # r13 centerpiece: left-deep INNER-join chain (star) side pruning
-    # (VERDICT r12 #1) — takes the head slot of events_incident_counts
-    # (the temporal family stays gated by events_asof_purchase +
-    # events_sessions in the head; the banded-range row re-registers
-    # below the cap).  The star gate subsumes r12's single-join shape
-    # (same binder, N=1), so versioned_sql_join_prune stays below the
-    # cap.
-    del out["events_incident_counts"]
     out["versioned_sql_star_prune"] = _q_versioned_sql_star_prune
-    # r13 #3: subquery-IN pruning through the MERGE-probe key-set
-    # machinery — takes the head slot of text_rarity_repetition (the
-    # text family stays gated by text_doc_suite + text_winnow in the
-    # head; the row re-registers below the cap)
-    del out["text_rarity_repetition"]
-    out["versioned_sql_subquery_in"] = _q_versioned_sql_subquery_in
-    # r14 rotation (VERDICT r13 #1): the two rows the r13 gates
-    # displaced return to the head so the driver re-verifies them —
-    # rarity's plan changed in r13 (1083348, aggregate-early rewrite)
-    # while it sat outside the verified window.  The now-proven
-    # in_prune/subquery_in gates rotate below the cap; the
-    # versioned-SQL family stays head-gated by versioned_sql_star_prune
-    # (the N-join binder subsumes both the single-IN and subquery-IN
-    # machinery it was built on).
-    del out["versioned_sql_in_prune"]
-    del out["versioned_sql_subquery_in"]
+
+    # ---- temporal and text variants ------------------------------ 49-50
     out["events_incident_counts"] = _q_incident_counts
     out["text_rarity_repetition"] = _q_text_rarity_repetition
 
     # ================= past the 50-row driver cap =================
     out["versioned_sql_in_prune"] = _q_versioned_sql_in_prune
     out["versioned_sql_subquery_in"] = _q_versioned_sql_subquery_in
-    # r13 #2: OR-union (anti-range) pruning — below the cap, the
-    # versioned-SQL family is gated in the head by star_prune +
-    # subquery_in + in_prune
+    # OR-union (anti-range) pruning
     out["versioned_sql_or_union"] = _q_versioned_sql_or_union
-    # r13 #6: per-CTE-body pruning — below the cap, same head family
+    # per-CTE-body pruning
     out["versioned_sql_cte_prune"] = _q_versioned_sql_cte_prune
     out["events_conversion_funnel"] = lambda spark, sf: (
         analytics.conversion_funnel(
@@ -4231,27 +4137,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     )
     out["multimodal_png_roundtrip"] = _q_multimodal_png
-    # r12 #4: spec evolution (below the cap; the partition family is
-    # gated in the head by partitioned_prune + bucket_point)
+    # partition spec evolution
     out["versioned_spec_evolution"] = _q_versioned_spec_evolution
-    # r12: the full predicate algebra (OR-disjunction + LIKE prefix +
-    # IS NOT NULL) in one statement — below the cap, the family is
-    # gated in the head by versioned_sql_in_prune
+    # the full predicate algebra (OR-disjunction + LIKE prefix +
+    # IS NOT NULL) in one statement
     out["versioned_sql_predicates"] = _q_versioned_sql_predicates
-    # r12: single-INNER-JOIN side pruning (below the cap, same head
-    # family)
+    # single-INNER-JOIN side pruning
     out["versioned_sql_join_prune"] = _q_versioned_sql_join_prune
     out["events_attribution"] = lambda spark, sf: joins.purchase_attribution(
         _load(spark, sf, "events")
     )
     out["versioned_merge_customers"] = _q_versioned_merge
     out["versioned_update_where"] = _q_versioned_update_where
-    # r10 wave 6: Bloom point-probe erasure (build_bloom + delete by
-    # scattered high-cardinality key); versioned family stays gated in
-    # the head by merge_when/dv_delete/schema_evolution
+    # Bloom point-probe erasure (build_bloom + delete by scattered
+    # high-cardinality key)
     out["versioned_bloom_delete"] = _q_versioned_bloom_delete
-    # r10 wave 9: zero-copy plain-parquet conversion (CONVERT TO
-    # DELTA analogue)
+    # zero-copy plain-parquet conversion (CONVERT TO DELTA analogue)
     out["versioned_convert_supplier"] = _q_versioned_convert_supplier
     out["heavy_hitters_orders"] = lambda spark, sf: profile.heavy_hitters(
         _load(spark, sf, "orders"), ["o_custkey"], k=20
@@ -4271,7 +4172,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # duckdb.create_function on the SAME Python core)
     out["tokens_subword_allocation"] = _q_tokens_subword_allocation
     out["tokens_bpe_allocation"] = _q_tokens_bpe_allocation
-    # r6: persisted-sidecar pruning (no query-time footer reads) and
+    # persisted-sidecar pruning (no query-time footer reads) and
     # the two skew-mitigation join plans — each contracted to equal
     # the plain-scan / plain-join oracle exactly
     out["zonemap_sidecar_scan"] = _q_zonemap_sidecar
@@ -4289,7 +4190,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["events_volume_anomalies"] = lambda spark, sf: (
         analytics.volume_anomalies(_load(spark, sf, "events"))
     )
-    # r6: gap-based batch sessionization (one shuffle serves lag +
+    # gap-based batch sessionization (one shuffle serves lag +
     # running-sum + the partition-local session rollup) and SemDeDup
     # cluster-bounded semantic near-dup pairs (deterministic stride
     # codebook = the oracle tier; trained k-means codebook available)
@@ -4310,7 +4211,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # and local verification targets; every one retains its oracle.
     for t in TABLES:
         out[f"checktable_{t}"] = _checktable_query(t)
-    # r5 head rotations — still oracle-verified locally, just past the cap
     out["events_running_total"] = _q_running_total
     out["dedup_pairs"] = _q_dedup_pairs
     # temperature-scaled (T=2 -> SQRT, IEEE-exact cross-engine) tier
@@ -4746,14 +4646,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # commit-time CHECK constraints: violating append refused (r8)
     out["versioned_constrained_append"] = _q_versioned_constrained_append
     # change feed across a deletion-vector delete: the DV position
-    # delta IS the feed (r9; head-50 gates the DV family via
-    # versioned_dv_delete)
+    # delta IS the feed
     out["versioned_dv_changes"] = _q_versioned_dv_changes
-    # r11: the events shape proves a date-RANGE prunes to exactly the
-    # in-range days (the head's versioned_partitioned_prune gates the
-    # partition-layout family)
+    # the events shape proves a date-RANGE prunes to exactly the
+    # in-range days
     out["versioned_partitioned_events"] = _q_versioned_partitioned_events
-    # r11: HIDDEN partitioning (Iceberg transforms) — a ts range that
+    # HIDDEN partitioning (Iceberg transforms) — a ts range that
     # never mentions the partition prunes the synthetic day dirs
     out["versioned_hidden_partition"] = _q_versioned_hidden_partition
     return out
@@ -4834,7 +4732,7 @@ GROUP BY 1, 2
     out["like_selection"] = _like_selection_oracle()
     out["pricing_cube"] = _pricing_cube_oracle()
     out["events_running_total"] = _running_total_oracle()
-    # r5 families: zone-map pruned scan, SCD2 apply, BM25 retrieval
+    # zone-map pruned scan, SCD2 apply, BM25 retrieval
     out["zonemap_pruned_scan"] = _ZONEMAP_ORACLE
     out["zonemap_sidecar_scan"] = _ZONEMAP_ORACLE  # same contract, sidecar path
     out["skew_salted_revenue"] = _SKEW_SALTED_ORACLE

@@ -30,47 +30,20 @@ HEADLINE = [
     "text_quality",
     "ann_topk_prefiltered",
     "events_hourly_counts",
-    # r10: the versioned read paths join the headline so format
-    # overhead is tracked round-over-round — the table builds (commit +
-    # DML) are mirror-cached and paid in a PREBUILD SUBPROCESS (r11:
-    # they ran inside the timed session's JVM and its heap/cache
-    # pressure was the prime suspect for the r9→r10 1.5× artifact
-    # drift); the timed runs measure the snapshot read (plain) and the
-    # DV'd read (merge-on-read anti-filter) respectively.  Comparison
-    # point: agg_pricing_summary is the same-shape aggregate over plain
-    # parquet lineitem; versioned_latest_orders does it over the
-    # manifest-resolved orders snapshot.
+    # the versioned read paths: the table builds (commit + DML) are
+    # mirror-cached and paid in a PREBUILD SUBPROCESS, so the timed
+    # runs measure the snapshot read (plain), the DV'd read
+    # (merge-on-read anti-filter), the partition-scoped DELETE + pruned
+    # read, and the SQL front door's IN-list and star-join pruning.
+    # Comparison point: agg_pricing_summary is the same-shape aggregate
+    # over plain parquet lineitem; versioned_latest_orders does it over
+    # the manifest-resolved orders snapshot.
     "versioned_latest_orders",
     "versioned_dv_delete",
+    "versioned_partitioned_prune",
+    "versioned_sql_in_prune",
+    "versioned_sql_star_prune",
 ]
-
-# BENCH_r10's exact query set — summed separately so cross-round session
-# drift is quantifiable from adjacent artifacts even as queries join the
-# headline (compare subtotals at matching keys, never raw totals).
-R10_SET = list(HEADLINE)
-
-# r11: the partition-layout read path joins the headline — the
-# partition-scoped DELETE + pruned read over the hive-partitioned
-# versioned orders mirror (build paid in the prebuild subprocess).
-HEADLINE.append("versioned_partitioned_prune")
-
-# BENCH_r11's exact query set (17 queries) — same cross-round contract
-# as R10_SET.
-R11_SET = list(HEADLINE)
-
-# r12: the SQL front door's alias+IN file pruning joins the headline —
-# an aggregate over the same partitioned mirror whose binding plans
-# only the two listed priorities' partition files.
-HEADLINE.append("versioned_sql_in_prune")
-
-# BENCH_r12's exact query set (18 queries) — same cross-round contract
-# as R10_SET/R11_SET.
-R12_SET = list(HEADLINE)
-
-# r13: the star-join side pruning joins the headline — the three-table
-# INNER chain over the partitioned orders mirror + customer + nation
-# mirrors, every side bound to its own pruned scan.
-HEADLINE.append("versioned_sql_star_prune")
 
 
 def _prebuild_mirrors(sf_dir: str) -> None:
@@ -248,36 +221,16 @@ def main() -> None:
                 "queries": timings,
                 "spread": spread,
                 "sf": sf,
-                # session-speed scalar + fixed-set subtotal: compare
-                # THESE across rounds before believing any total moved.
-                # Two calibrations bracket the timed loop: a start≫end
-                # pair means the session was still recovering from
-                # prior heavy work when timing began (measured locally:
-                # a bench right after a 50-min suite read 1.9× slower
-                # with load 0 — cache/JVM state, not contention — and
-                # recovered within minutes).
+                # session-speed scalar: compare it across runs before
+                # believing any total moved.  Two calibrations bracket
+                # the timed loop: a start≫end pair means the session
+                # was still recovering from prior heavy work when
+                # timing began (measured locally: a bench right after
+                # a 50-min suite read 1.9× slower with load 0 —
+                # cache/JVM state, not contention — and recovered
+                # within minutes).
                 "calibration_sec": calibration,
                 "calibration_end_sec": calibration_end,
-                "subtotals": {
-                    "r10_16q": round(
-                        sum(
-                            timings[n] for n in R10_SET if n in timings
-                        ),
-                        3,
-                    ),
-                    "r11_17q": round(
-                        sum(
-                            timings[n] for n in R11_SET if n in timings
-                        ),
-                        3,
-                    ),
-                    "r12_18q": round(
-                        sum(
-                            timings[n] for n in R12_SET if n in timings
-                        ),
-                        3,
-                    ),
-                },
                 # self-diagnosing record: a true reading was taken on
                 # a quiet machine; contended=true says "distrust the
                 # magnitudes" — the box never quieted within the

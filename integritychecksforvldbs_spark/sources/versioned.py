@@ -7,7 +7,7 @@ minimal log-structured table format (the Delta/Iceberg idea reduced
 to its core):
 
 - data files are IMMUTABLE once written, under ``{path}/data/``;
-- a table VERSION is a manifest (``{path}/_versions/vNNNNNNNNNN/``)
+- a table VERSION is a manifest (``{path}/_versions/vNNNNNNNNNN.json``)
   listing the exact data files visible at that version — readers
   resolve a manifest, then read only its files, so a reader holds a
   consistent snapshot no matter what commits land mid-query;
@@ -35,12 +35,6 @@ to its core):
   worst a temporary manifest file) that NO reader can see;
   :func:`vacuum` reclaims anything unreferenced by the retained
   manifests.
-
-Tables written by the pre-atomic layout (a ``vN/`` directory holding
-``manifest.json``, where a committer COULD die between claiming the
-directory and writing the body) remain readable: a legacy bodyless
-directory holds its number but commits nothing, and readers skip it.
-New commits always install the atomic single-file form.
 
 Operations: :func:`commit` (append/overwrite), :func:`read` (latest
 or ``version=``, i.e. time travel), :func:`history`,
@@ -76,7 +70,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 _VDIR = "_versions"
-_BODY = "manifest.json"
 _MAX_COMMIT_RETRIES = 20
 
 # every Nth version serializes the FULL folded snapshot; versions in
@@ -335,23 +328,11 @@ def _read_manifest(path: str, v: int) -> dict | None:
         # two-step backend write: not committed
         man = rec.payload if rec is not None else None
     else:
-        man = None
         try:
             with open(os.path.join(_vdir(path), _vname(v) + ".json")) as f:
                 man = json.load(f)
         except FileNotFoundError:
-            # legacy dir layout: vN/manifest.json, possibly bodyless
-            # (the old protocol's committer could die between its
-            # mkdir and body write)
-            try:
-                with open(
-                    os.path.join(_vdir(path), _vname(v), _BODY)
-                ) as f:
-                    man = json.load(f)
-            except (
-                FileNotFoundError, NotADirectoryError, json.JSONDecodeError
-            ):
-                man = None
+            man = None
         except json.JSONDecodeError:
             man = None  # unreachable for atomic installs; defensive
     def _gate(body: dict) -> dict:
@@ -851,9 +832,9 @@ def _evolve_mapping(
 
 
 def _versions(path: str) -> list[int]:
-    """Every version NUMBER present in the log: atomic ``vN.json``
-    manifests (always complete) plus legacy ``vN/`` dirs (which may be
-    bodyless corpses that still hold their number)."""
+    """Every version NUMBER present in the log: the ``vN.json``
+    manifests, or the backend's ``vN`` records (a payload-less record
+    is an in-flight or crashed two-step write, not a commit)."""
     b = _backend_for(path)
     if b is not None:
         out = set()
@@ -869,8 +850,6 @@ def _versions(path: str) -> list[int]:
     for n in names:
         if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit():
             out.add(int(n[1:-5]))
-        elif n.startswith("v") and n[1:].isdigit():
-            out.add(int(n[1:]))
     return sorted(out)
 
 
@@ -965,15 +944,10 @@ def _committed_at(path: str, v: int, man: dict) -> float | None:
     if b is not None:
         rec = b.get(_vname(v))
         return rec.modified if rec is not None else None
-    for p in (
-        os.path.join(_vdir(path), _vname(v) + ".json"),
-        os.path.join(_vdir(path), _vname(v), _BODY),
-    ):
-        try:
-            return os.path.getmtime(p)
-        except OSError:
-            continue
-    return None
+    try:
+        return os.path.getmtime(os.path.join(_vdir(path), _vname(v) + ".json"))
+    except OSError:
+        return None
 
 
 def version_at(path: str, timestamp: float) -> int:
@@ -1049,33 +1023,19 @@ def _read_latest_hint(path: str) -> int | None:
 def _latest_committed(path: str) -> tuple[int, dict] | None:
     """Highest version whose manifest exists, FOLDED to its snapshot
     view (``files``/``stats`` always materialized).  Atomic installs
-    make every listed ``vN.json`` complete; a legacy bodyless ``vN/``
-    dir holds its number but commits nothing and is skipped.
+    make every listed ``vN.json`` complete.
 
     Resolution order: the ``_latest`` pointer (one GET) plus a bounded
-    forward probe over slots committed after the pointer was written —
-    stepping over legacy corpse dirs exactly like :func:`_next_claim`
-    — with the full directory listing only as the fallback for tables
-    that predate the pointer (or whose pointer write was lost)."""
+    forward probe over slots committed after the pointer was written,
+    with the full directory listing only as the fallback for a missing
+    or damaged pointer."""
     hint = _read_latest_hint(path)
     if hint is not None:
         man = _read_manifest(path, hint)
         if man is not None:
             v, best = hint, man
-            probe = v + 1
-            fs = _backend_for(path) is None
-            while True:
-                m2 = _read_manifest(path, probe)
-                if m2 is not None:
-                    v, best = probe, m2
-                elif not (
-                    fs
-                    and os.path.isdir(
-                        os.path.join(_vdir(path), _vname(probe))
-                    )
-                ):
-                    break  # no artifact at all: nothing committed past v
-                probe += 1  # committed, or a corpse slot: keep probing
+            while (m2 := _read_manifest(path, v + 1)) is not None:
+                v, best = v + 1, m2
             return v, _fold(path, best)
         # hint names a version with no manifest (externally damaged
         # log, or a unit test hand-pruned it): distrust it entirely
@@ -1089,12 +1049,9 @@ def _latest_committed(path: str) -> tuple[int, dict] | None:
 def _contiguous_committed(path: str, from_v: int) -> int:
     """Highest version V such that EVERY version in (from_v, V] has a
     committed manifest — the safe streaming frontier.  With atomic
-    manifest installs the log has no gaps and this equals the latest
-    committed version; on a legacy-layout table a bodyless claim dir
-    caps the frontier so a streaming offset never commits past a
-    version slot whose body might still be in flight (advancing past
-    it would permanently drop that version's files from the stream
-    once the checkpoint moves on)."""
+    manifest installs the log has no gaps, so this equals the latest
+    committed version; a gap below a committed version means the log
+    was vacuumed or damaged."""
     v = from_v
     while _read_manifest(path, v + 1) is not None:
         v += 1
@@ -1153,10 +1110,7 @@ def _write_checkpoint(path: str, v: int) -> None:
 
 def _next_claim(path: str, cur_v: int) -> int | None:
     """The version slot a committer who read ``cur_v`` as the latest
-    committed version may claim: the first slot past ``cur_v`` not
-    held by a VERIFIED legacy bodyless dir (old-protocol crashed
-    committer — holds its number, commits nothing, will never gain a
-    body because no old-protocol writer exists anymore).
+    committed version may claim: exactly ``cur_v + 1``.
 
     Returns ``None`` when the slot already holds a committed manifest:
     the caller's view is STALE — someone committed after its read —
@@ -1172,18 +1126,10 @@ def _next_claim(path: str, cur_v: int) -> int | None:
     nxt = cur_v + 1
     b = _backend_for(path)
     if b is not None:
-        # backend logs have no legacy corpses: any record at the slot
-        # — committed, or an in-flight two-step write — means our view
-        # is (or is about to be) stale; re-base/retry
+        # any record at the slot — committed, or an in-flight two-step
+        # write — means our view is (or is about to be) stale
         return None if b.get(_vname(nxt)) is not None else nxt
-    while True:
-        if _read_manifest(path, nxt) is not None:
-            return None  # committed after our read — stale view, re-base
-        legacy = os.path.join(_vdir(path), _vname(nxt))
-        if os.path.isdir(legacy):
-            nxt += 1  # proven legacy bodyless corpse: skip its number
-            continue
-        return nxt
+    return None if _read_manifest(path, nxt) is not None else nxt
 
 
 def _install_manifest(path: str, v: int, man: dict) -> bool:
@@ -2849,11 +2795,10 @@ def _commit_prepared(
                 f"committed v{cur_v}; reload and retry"
             )
         # base manifest and claim number from ONE consistent view: the
-        # claim is exactly cur_v+1 (stepping only over verified legacy
-        # corpse dirs); a commit landing after the cur read surfaces as
-        # a None claim or a lost CAS — both re-base — never as a silent
-        # skip-past that would drop the interloper's files (the r7
-        # lost-update TOCTOU)
+        # claim is exactly cur_v+1; a commit landing after the cur read
+        # surfaces as a None claim or a lost CAS — both re-base — never
+        # as a silent skip-past that would drop the interloper's files
+        # (the lost-update TOCTOU)
         nxt = _next_claim(path, cur_v)
         if nxt is None:
             continue  # stale view: re-read the log and re-base
@@ -4670,10 +4615,9 @@ def changes(
 
 
 def history(path: str) -> list[VersionInfo]:
-    """Committed versions, oldest first (bodyless crashed claims are
-    not part of history).  ``n_files`` is the SNAPSHOT size; for a
-    delta body it folds incrementally over the ascending walk (one
-    raw read per version, no per-version chain re-fold)."""
+    """Committed versions, oldest first.  ``n_files`` is the SNAPSHOT
+    size; for a delta body it folds incrementally over the ascending
+    walk (one raw read per version, no per-version chain re-fold)."""
     out = []
     counts: dict[int, int] = {}
     for v in _versions(path):
@@ -6464,9 +6408,7 @@ def vacuum(
                 _remove_manifest(path, v)
     # crashed-committer residue, age-guarded (a slow committer may
     # still be mid-install): stale .tmp manifest bodies that never
-    # linked into place, and legacy bodyless claim DIRS below the
-    # latest committed version (old two-step protocol's corpses; a
-    # higher legacy slot may belong to an in-flight legacy commit)
+    # linked into place
     try:
         names = os.listdir(_vdir(path))
     except FileNotFoundError:
@@ -6511,27 +6453,12 @@ def vacuum(
                 os.unlink(full)
         except OSError:
             pass
-    top = retained[-1] if retained else 0
-    for v in _versions(path):
-        if v >= top or _read_manifest(path, v) is not None:
-            continue
-        vd = os.path.join(_vdir(path), _vname(v))
-        if not os.path.isdir(vd):
-            continue
-        try:
-            if now - os.path.getmtime(vd) < min_age_s:
-                continue
-        except OSError:
-            continue
-        shutil.rmtree(vd)
     return removed
 
 
 def _remove_manifest(path: str, v: int) -> None:
-    """Remove version ``v``'s manifest artifact in whichever layout it
-    was written (atomic file, legacy directory, or backend record)."""
-    import shutil
-
+    """Remove version ``v``'s manifest artifacts: its ``vN.json`` and
+    checkpoint files, or its backend records."""
     b = _backend_for(path)
     if b is not None:
         for key in (_vname(v), _ckpt_key(v)):
@@ -6556,6 +6483,3 @@ def _remove_manifest(path: str, v: int) -> None:
             os.unlink(p)
         except FileNotFoundError:
             pass
-    d = os.path.join(_vdir(path), _vname(v))
-    if os.path.isdir(d):
-        shutil.rmtree(d)

@@ -79,12 +79,6 @@ class _CDFPartition(InputPartition):
     ranges: tuple | None = None
 
 
-# how long a legacy bodyless claim dir is presumed possibly in flight
-# before the stream steps over it as a corpse — mirrors vacuum's
-# in-flight-commit protection window
-_LEGACY_CLAIM_GRACE_S = 3600.0
-
-
 def _arrow_schema(files: list[str]):
     import pyarrow.parquet as pq
 
@@ -373,7 +367,7 @@ class _VersionedStreamReader(DataSourceStreamReader):
         diff against the predecessor's folded set."""
         man = _read_manifest(self.path, v)
         if man is None:
-            return 0  # a corpse the frontier aged past
+            return 0  # vacuumed since: _files_between reports the hole
         if "add_files" in man:
             return len(man["add_files"])
         prev = _snapshot(self.path, v - 1) if v > 1 else None
@@ -401,18 +395,12 @@ class _VersionedStreamReader(DataSourceStreamReader):
         return hi
 
     def latestOffset(self) -> dict:
-        # the CONTIGUOUS committed frontier, not the raw maximum: an
-        # offset must never commit past a version slot whose manifest
-        # might still land (possible only on legacy-layout tables,
-        # where a committer could die — or merely be slow — between
-        # claiming its slot dir and writing the body) — once the
-        # checkpoint advances past such a slot, a late-landing body's
-        # files are permanently lost to the stream.  Atomic manifest
-        # installs have no such gaps, so there the frontier IS the
-        # latest committed version.  The walk resumes from the last
-        # frontier, so cost per call is O(new versions).
-        import time
-
+        # the CONTIGUOUS committed frontier, not the raw maximum: atomic
+        # manifest installs leave no gaps, so the frontier IS the
+        # latest committed version, and a hole below a committed
+        # version means the log was vacuumed past the stream's
+        # checkpoint.  The walk resumes from the last frontier, so
+        # cost per call is O(new versions).
         frontier = getattr(self, "_frontier", None)
         if frontier is None:
             # seed the walk at the retained horizon: vacuum expires
@@ -437,32 +425,16 @@ class _VersionedStreamReader(DataSourceStreamReader):
                 if oldest is None
                 else max(self.starting_version, oldest - 1)
             )
-        while True:
-            frontier = _contiguous_committed(self.path, frontier)
-            cur = _latest_committed(self.path)
-            if cur is None or cur[0] <= frontier:
-                break  # frontier caught up with the committed log
-            # a hole at frontier+1 with committed versions past it
-            hole = os.path.join(
-                _local(self.path), "_versions", f"v{frontier + 1:010d}"
+        frontier = _contiguous_committed(self.path, frontier)
+        cur = _latest_committed(self.path)
+        if cur is not None and cur[0] > frontier:
+            # a hole at frontier+1 with committed versions past it:
+            # fail loudly rather than stalling the stream forever
+            raise FileNotFoundError(
+                f"version {frontier + 1} of {self.path!r} has no "
+                f"committed manifest but v{cur[0]} does — vacuumed "
+                "past the stream's checkpoint?"
             )
-            if not os.path.isdir(hole):
-                # no artifact at all: this slot was never a legacy
-                # claim — the manifest existed and vacuum expired it
-                # beyond this stream's checkpoint; fail loudly rather
-                # than stalling the stream forever
-                raise FileNotFoundError(
-                    f"version {frontier + 1} of {self.path!r} has no "
-                    f"committed manifest but v{cur[0]} does — vacuumed "
-                    "past the stream's checkpoint?"
-                )
-            # legacy bodyless claim dir: an in-flight legacy commit
-            # (wait — advancing would drop its files) or a crashed
-            # one (a corpse that will never commit; after the same
-            # grace vacuum applies, step over it)
-            if time.time() - os.path.getmtime(hole) < _LEGACY_CLAIM_GRACE_S:
-                break
-            frontier += 1
         self._frontier = frontier
         if self._last_emitted is None:
             # first call: uncapped (see __init__ — a capped offset
@@ -512,13 +484,6 @@ class _VersionedStreamReader(DataSourceStreamReader):
         for v in range(start_v + 1, end_v + 1):
             man = _read_manifest(self.path, v)
             if man is None:
-                legacy = os.path.join(
-                    _local(self.path), "_versions", f"v{v:010d}"
-                )
-                if os.path.isdir(legacy):
-                    # a legacy corpse latestOffset aged past: holds a
-                    # number, committed nothing — contributes no files
-                    continue
                 raise FileNotFoundError(
                     f"version {v} of {self.path!r} has no committed "
                     "manifest inside the batch range "
@@ -603,11 +568,6 @@ class _VersionedStreamReader(DataSourceStreamReader):
         for v in range(start_v + 1, end_v + 1):
             man = _read_manifest(self.path, v)
             if man is None:
-                legacy = os.path.join(
-                    _local(self.path), "_versions", f"v{v:010d}"
-                )
-                if os.path.isdir(legacy):
-                    continue  # corpse: committed nothing
                 raise FileNotFoundError(
                     f"version {v} of {self.path!r} has no committed "
                     "manifest inside the change-feed range "

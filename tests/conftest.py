@@ -190,6 +190,31 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _restore_process_memos():
+    """Put the process-global memos and registries back as they were
+    before each test, so a test that registers a log backend, binds a
+    SQL table name or fills a schema memo cannot change what a later
+    test on the same shard sees."""
+    from integritychecksforvldbs_spark.sources import loader, versioned, versioned_sql
+
+    saved = [
+        (d, dict(d))
+        for d in (
+            loader._SCHEMA_MEMO,
+            loader._NANOS_MEMO,
+            versioned._LOG_BACKENDS,
+            versioned_sql._TABLES,
+        )
+    ]
+    last_bound = versioned_sql.LAST_BOUND
+    yield
+    for d, before in saved:
+        d.clear()
+        d.update(before)
+    versioned_sql.LAST_BOUND = last_bound
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
     return {t: load_table(spark, f"{SF_DIR}/{t}.parquet") for t in TABLES}

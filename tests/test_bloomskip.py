@@ -125,3 +125,23 @@ def test_bloom_read_many_equals_loop(spark, clustered):
     assert batched == sorted(loop)
     empty = bloomskip.bloom_read_many(spark, clustered, "k", [])
     assert empty.count() == 0
+
+
+def test_bloom_prunes_on_percent_encoded_paths(spark, tmp_path):
+    """A table under a path with a space: input_file_name percent-
+    encodes, the listing does not — the index must still match (the
+    canonical-path pairing), so pruning fires instead of silently
+    keeping everything."""
+    from pyspark.sql import functions as F2
+
+    from integritychecksforvldbs_spark.sources import bloomskip
+
+    dest = str(tmp_path / "my data" / "tbl")
+    spark.range(0, 2000).select(F2.col("id").alias("k")).repartitionByRange(
+        4, "k"
+    ).write.parquet(dest)
+    bloomskip.build_bloom_index(spark, dest, "k")
+    kept, skipped = bloomskip.bloom_prune(spark, dest, "k", 1500)
+    assert skipped, "encoded-path index must still match the listing"
+    rows = bloomskip.bloom_read(spark, dest, "k", 1500).collect()
+    assert [r["k"] for r in rows] == [1500]

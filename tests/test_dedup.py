@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from integritychecksforvldbs_spark.operators import dedup
+from integritychecksforvldbs_spark.sources import loader
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -383,3 +385,100 @@ def test_cluster_keepers_unionfind_matches_propagation(spark):
     )
     ref = {(int(r[0]), int(r[1])) for r in slow.collect()}
     assert ref == {(int(a), int(b)) for a, b in got}
+
+
+def test_pair_metrics_round_half_up_matches_duckdb(spark):
+    """precision = 1/128 = 0.0078125 exactly: Python round() gives
+    0.007812 (banker's), DuckDB and Spark HALF_UP give 0.007813 — the
+    metrics must round engine-side."""
+    import duckdb
+
+    from integritychecksforvldbs_spark.operators import dedup
+
+    pred = spark.createDataFrame(
+        [(i, i + 1000) for i in range(128)], "doc_id_a long, doc_id_b long"
+    )
+    truth = spark.createDataFrame([(0, 1000)], "doc_id_a long, doc_id_b long")
+    row = dedup.pair_set_metrics(pred, truth).collect()[0]
+    assert row["precision"] == 0.007813
+    want = duckdb.connect().execute("SELECT ROUND(1.0/128, 6)").fetchone()[0]
+    assert row["precision"] == want
+
+
+def _string_shingles(df, n=3):
+    sharr = dedup.shingle_arrays(df, "text", "doc_id", n)
+    return sharr.select("doc_id", F.explode("sh").alias("shingle"))
+
+
+def _string_jaccard(df, threshold, n=3):
+    return dedup.jaccard_from_scores(
+        dedup.pair_scores(_string_shingles(df, n)), threshold
+    )
+
+
+def _string_containment(df, threshold, n=3):
+    return dedup.containment_from_scores(
+        dedup.pair_scores(_string_shingles(df, n)), threshold
+    )
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    base = loader.load_table(spark, f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    # the raw fixture has no near-dup groups — inject known overlaps so
+    # the parity assertions compare non-empty pair sets (plus a short
+    # doc to pin the < n-token domain)
+    extra = base.sparkSession.createDataFrame(
+        [
+            (900001, "the quick brown fox jumps over the lazy dog"),
+            (900002, "the quick brown fox jumps over the lazy cat"),
+            (900003, "the quick brown fox jumps over the lazy dog"),
+            (900004, "a b"),
+        ],
+        "doc_id long, text string",
+    )
+    return base.unionByName(extra)
+
+
+def test_ngram_jaccard_hashed_equals_string(spark, docs):
+    got = sorted(
+        (r["doc_id_a"], r["doc_id_b"], r["jaccard"])
+        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.2).collect()
+    )
+    want = sorted(
+        (r["doc_id_a"], r["doc_id_b"], r["jaccard"])
+        for r in _string_jaccard(docs, 0.2).collect()
+    )
+    assert got == want and len(got) > 0
+
+
+def test_ngram_containment_hashed_equals_string(spark, docs):
+    got = sorted(
+        (r["src_doc_id"], r["dst_doc_id"], r["containment"])
+        for r in dedup.ngram_containment_pairs(docs, threshold=0.2).collect()
+    )
+    want = sorted(
+        (r["src_doc_id"], r["dst_doc_id"], r["containment"])
+        for r in _string_containment(docs, 0.2).collect()
+    )
+    assert got == want and len(got) > 0
+
+
+def test_hashed_shingles_max_df_matches_string_cut(spark, docs):
+    # the frequency cut must drop the same GRAMS (hash equality ==
+    # string equality on real text): per-doc surviving gram counts agree
+    hs = (
+        dedup.hashed_shingles(docs, max_df=3)
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("c"))
+    )
+    ss = (
+        dedup.shingles(docs, max_df=3)
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("c"))
+    )
+    got = {(r["doc_id"], r["c"]) for r in hs.collect()}
+    want = {(r["doc_id"], r["c"]) for r in ss.collect()}
+    assert got == want

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from integritychecksforvldbs_spark.sources import loader
 from integritychecksforvldbs_spark.sources.loader import load_any, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -110,3 +111,67 @@ def test_xml_roundtrip(spark, tmp_path):
         (1, "alpha"),
         (2, "beta <&> escaped"),
     ]
+
+
+def test_load_table_multipath_nanos_second_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns_val = 1_700_000_000_000_000_123  # epoch nanos
+    first = str(tmp_path / "first.parquet")
+    second = str(tmp_path / "second.parquet")
+    # only the SECOND file's footer declares TIMESTAMP(NANOS); the
+    # first carries the same values as raw int64 (what nanosAsLong
+    # reads them as).  Probing only paths[0] would take the plain
+    # branch, and the vectorized reader would throw
+    # PARQUET_TYPE_ILLEGAL on the second file.
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([1], pa.int64()),
+                "ts": pa.array([ns_val], pa.int64()),
+            }
+        ),
+        first,
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([2], pa.int64()),
+                "ts": pa.array([ns_val], pa.timestamp("ns")),
+            }
+        ),
+        second,
+    )
+    rows = loader.load_table(spark, first, second).orderBy("k").collect()
+    assert [r["k"] for r in rows] == [1, 2]
+    # both rows land as TIMESTAMP truncated to micros
+    assert rows[0]["ts"] == rows[1]["ts"] and rows[0]["ts"] is not None
+
+
+def test_schema_memo_keyed_on_confs(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "memo.parquet")
+    pq.write_table(pa.table({"A": pa.array([1], pa.int64())}), p)
+    before = dict(loader._SCHEMA_MEMO)
+    loader._read_parquet(spark, p).collect()
+    cur = spark.conf.get("spark.sql.caseSensitive", "false")
+    try:
+        spark.conf.set(
+            "spark.sql.caseSensitive",
+            "true" if cur == "false" else "false",
+        )
+        loader._read_parquet(spark, p).collect()
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", cur)
+    new_keys = [
+        k for k in loader._SCHEMA_MEMO if k not in before and k[0][0] == p
+    ]
+    # one memo entry per conf fingerprint — a second session with
+    # different parquet-affecting confs can never be served the other
+    # session's inference
+    assert len(new_keys) == 2
+    confs = {k[1:] for k in new_keys}
+    assert len(confs) == 2

@@ -4,6 +4,7 @@ nothing is silently dropped (contrast DROPMALFORMED) and nothing kills
 the job (contrast FAILFAST)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from integritychecksforvldbs_spark.sources.ingest import (
     ingest_quarantined,
@@ -133,3 +134,54 @@ def test_blank_lines_skipped_not_phantom_rows(spark, tmp_path):
     goodj, badj = split_quarantine(rawj)
     assert [r["k"] for r in goodj.collect()] == [1]
     assert badj.count() == 0  # whitespace-only JSON lines skip, like native
+
+
+def test_ingest_leaves_caller_schema_untouched(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), True),
+            T.StructField("label", T.StringType(), True),
+        ]
+    )
+    (tmp_path / "a.csv").write_text("k,label\n1,x\n2,y\n")
+    before = schema.jsonValue()
+    for _ in range(2):  # a second call with the SAME object must work
+        raw = ingest_quarantined(spark, str(tmp_path), schema, fmt="csv")
+        good, bad = split_quarantine(raw)
+        assert sorted(r["k"] for r in good.collect()) == [1, 2]
+        assert bad.count() == 0
+    assert schema.jsonValue() == before
+    assert schema.fieldNames() == ["k", "label"]
+
+
+def test_headerless_file_keeps_header_valued_data_row(spark, tmp_path):
+    """An all-string schema ingesting a row that SPELLS like the
+    header: in a file with no header it is data and must survive."""
+    sch = "a string, b string"
+    (tmp_path / "with_header.csv").write_text("a,b\n1,x\n2,y\n")
+    (tmp_path / "headerless.csv").write_text("3,z\na,b\n4,w\n")
+    good, bad = split_quarantine(
+        ingest_quarantined(spark, str(tmp_path), sch, fmt="csv")
+    )
+    assert bad.count() == 0
+    rows = sorted((r["a"], r["b"]) for r in good.collect())
+    # the two real headers dropped; the header-LOOKING data row kept
+    assert rows == [("1", "x"), ("2", "y"), ("3", "z"), ("4", "w"), ("a", "b")]
+
+
+def test_disagreeing_header_still_quarantines(spark, tmp_path):
+    """A file whose header disagrees with the declared contract keeps
+    surfacing the mismatch in quarantine (it never matches the
+    canonical first line, so the sniff leaves it alone)."""
+    (tmp_path / "drifted.csv").write_text("k,label,price\n1,x,1.5\n")
+    good, bad = split_quarantine(
+        ingest_quarantined(
+            spark, str(tmp_path), "k bigint, price double, label string",
+            fmt="csv",
+        )
+    )
+    assert bad.filter(
+        F.col("_corrupt_record") == "k,label,price"
+    ).count() == 1

@@ -21,6 +21,7 @@ from integritychecksforvldbs_spark.plans.ordering import (
 )
 from integritychecksforvldbs_spark.plans.queue import (
     ConditionalStoreBackend,
+    DirCasBackend,
     WorkQueue,
 )
 from integritychecksforvldbs_spark.sources.catalog import list_filegroups, list_objects
@@ -369,3 +370,39 @@ def test_run_checkfilegroup(spark):
     assert res.object == "region:PRIMARY"
     assert res.metrics["n_rows"] == 5
     assert res.metrics["alloc_n_files"] == 1
+
+
+def test_stale_release_sweeps_tmp_litter(tmp_path):
+    """A writer dying between open(tmp) and os.replace
+    leaves .body.*.tmp litter in the claim dir; the stale sweep must
+    still release the claim instead of wedging the database forever."""
+    q = WorkQueue(str(tmp_path), "P", ["db1"], session_id="w1",
+                  stale_after_s=0.2)
+    claim_dir = os.path.join(
+        q.backend.root, *f"{q.dir}/db_db1/claim".split("/")
+    )
+    os.mkdir(claim_dir)
+    with open(os.path.join(claim_dir, ".body.dead.tmp"), "w") as f:
+        f.write('{"session_id": "dead"')  # torn body, no record.json
+    import time
+
+    time.sleep(0.3)  # let the dir mtime go stale
+    assert q.claim_next() == "db1"  # released and re-claimed
+    q.complete("db1")
+    assert q.all_done()
+
+
+def test_dircas_list_scoped_to_prefix(tmp_path):
+    """list(prefix) must walk only the prefix's parent, so
+    a store accumulating rounds/queues doesn't make every claim
+    O(everything).  Behavior pin: keys outside the prefix never
+    appear; partial last segments (db_) match."""
+    be = DirCasBackend(str(tmp_path))
+    be.put_if_absent("queue_a/r1/round", {})
+    be.put_if_absent("queue_a/r1/db_x/meta", {})
+    be.put_if_absent("queue_b/r1/db_y/meta", {})
+    assert be.list("queue_a/") == [
+        "queue_a/r1/db_x/meta", "queue_a/r1/round"
+    ]
+    assert be.list("queue_a/r1/db_") == ["queue_a/r1/db_x/meta"]
+    assert be.list("queue_zzz/") == []  # absent parent: no walk, no crash

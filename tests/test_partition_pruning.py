@@ -145,3 +145,34 @@ def test_partition_backfill_requires_partition_cols(spark, tmp_path):
             spark.range(1).selectExpr("id AS v"),
             ["day"],
         )
+
+
+def test_checkfilegroup_partitioned_keeps_referenced_column(spark, tmp_path):
+    """Partitioning on a column the expectations reference (lang: the
+    lang_is_iso2 rule) must not drop it from the checked frame."""
+    from integritychecksforvldbs_spark.sources.loader import load_table
+
+    docs = load_table(spark, f"{SF_DIR}/documents.parquet")
+    root = str(tmp_path / "docs_by_lang")
+    partitioned_mirror(spark, docs, root, ["lang"])
+    res = kernels.run_checkfilegroup_partitioned(
+        spark, root, "lang", "en", "db", "documents"
+    )
+    assert res.passed
+    assert any("lang" in k for k in res.metrics), res.metrics
+
+
+def test_partitioned_mirror_rebuilds_on_layout_change(spark, tmp_path):
+    """A mirror built with different partition columns must rebuild,
+    not silently reuse the stale layout."""
+    df = spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "y")], "k long, p string, q string"
+    )
+    path = str(tmp_path / "mirror")
+    partitioned_mirror(spark, df, path, ["p"])
+    m2 = partitioned_mirror(spark, df, path, ["q"])
+    plan = (
+        m2.filter(F.col("q") == "x")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "PartitionFilters: [isnotnull(q" in plan

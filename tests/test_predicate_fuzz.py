@@ -7,7 +7,10 @@ BITE (range-clustered k, identity-partitioned g, nullable j), each
 asserting ``read_sql_where`` == plain ``read().filter``.  The
 profile may extract whatever it wants; the answers must be equal.
 This is the test that catches an unsound bound the moment a new atom
-joins the algebra.
+joins the algebra.  Pinned cases follow it: an atom whose bound cannot
+compare with a column's stats (a date function over a STRING column)
+reads unpruned instead of raising, and a LIKE-prefix upper bound never
+lands in the surrogate block.
 """
 
 from __future__ import annotations
@@ -253,3 +256,101 @@ def test_random_join_chains_prune_soundly(spark, tmp_path):
         register_table("fz_f", None)
         register_table("fz_c", None)
         register_table("fz_n", None)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture()
+def str_date_tbl(spark, tmp_path):
+    """A table whose date column is a plain STRING (ISO text) — the
+    shape the date-fn atoms must survive, not prune."""
+    path = str(tmp_path / "sdt")
+    df = spark.createDataFrame(
+        [
+            (i, f"2024-01-{(i % 9) + 1:02d}", f"name-{i}")
+            for i in range(40)
+        ],
+        "k int, s string, nm string",
+    )
+    versioned.commit(spark, df.repartitionByRange(4, "k"), path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "cond",
+    [
+        "to_date(s) = '2024-01-05'",
+        "CAST(s AS DATE) >= '2024-01-03'",
+        "year(s) = 2024",
+    ],
+)
+def test_date_fn_atom_over_string_column_reads_unpruned(
+    spark, str_date_tbl, cond
+):
+    got = versioned.read_sql_where(spark, str_date_tbl, cond)
+    exp = versioned.read(spark, str_date_tbl).filter(F.expr(cond))
+    assert _rows(got) == _rows(exp)
+    assert got.count() > 0  # the predicate really selects rows
+
+
+def test_date_fn_atom_over_string_column_explain_no_crash(
+    spark, str_date_tbl
+):
+    info = versioned.explain_pruning(
+        spark, str_date_tbl, "to_date(s) = '2024-01-05'"
+    )
+    # incomparable bound: every file kept (conservative), no raise
+    assert info["files_after_stats"] == info["files_total"]
+
+
+def test_stat_lt_guard_keeps_incomparable_file():
+    """Unit pin on the exact comparison the crash used: datetime
+    bound vs string stat must KEEP the file, not raise."""
+    import datetime
+
+    man = {
+        "files": ["f1"],
+        "stats": {
+            "f1": {
+                "n_rows": 5,
+                "cols": {
+                    "s": {
+                        "ok": True,
+                        "min": "2024-01-01",
+                        "max": "2024-01-09",
+                        "nulls": 0,
+                        "nulls_ok": True,
+                    }
+                },
+            }
+        },
+    }
+    lo = datetime.date(2024, 1, 5)
+    kept, skipped = versioned._prune_manifest_files(
+        man, {"s": (lo, lo)}, None, None
+    )
+    assert kept == ["f1"] and skipped == []
+
+
+def test_like_prefix_surrogate_boundary_bound_is_encodable(spark, tmp_path):
+    path = str(tmp_path / "sur")
+    edge = "a" + chr(0xD7FF)  # next codepoint is the surrogate block
+    df = spark.createDataFrame(
+        [(1, edge + "x"), (2, "zzz"), (3, edge)], "k int, s string"
+    )
+    versioned.commit(spark, df, path)
+    cond = f"s LIKE '{edge}%'"
+    got = versioned.read_sql_where(spark, path, cond)
+    assert sorted(r.k for r in got.collect()) == [1, 3]
+    # and the profile's upper bound is not an unpaired surrogate
+    bounds, _ = versioned._condition_profile(cond)
+    lo, hi = bounds["s"]
+    assert lo == edge
+    assert not (0xD800 <= ord(hi[-1]) <= 0xDFFF)
+
+
+def test_like_prefix_normal_case_unchanged():
+    bounds, _ = versioned._condition_profile("nm LIKE 'name-1%'")
+    assert bounds["nm"] == ("name-1", "name-2")

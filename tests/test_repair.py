@@ -61,3 +61,12 @@ def test_repair_null_vs_value_is_update(spark):
     assert [(r["op"], r["x"]) for r in rows] == [("update", None)]
     repaired = apply_repair(b, repair_plan(a, b, ["k"]), ["k"])
     assert sorted(map(repr, repaired.collect())) == sorted(map(repr, a.collect()))
+
+
+def test_repair_plan_keys_only_table(spark):
+    """No compare columns: membership repair alone (not a reduce()
+    of an empty iterable)."""
+    a = spark.createDataFrame([(1,), (2,)], "k long")
+    b = spark.createDataFrame([(2,), (3,)], "k long")
+    plan = {(r["op"], r["k"]) for r in repair_plan(a, b, ["k"]).collect()}
+    assert plan == {("insert", 1), ("delete", 3)}

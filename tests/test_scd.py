@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import date
 
+import pytest
 from pyspark.sql import functions as F
 
 from integritychecksforvldbs_spark.operators import scd
@@ -236,3 +237,36 @@ def test_pit_join_is_hash_join_not_nested_loop(spark):
     )
     assert "BroadcastHashJoin" in plan
     assert "NestedLoop" not in plan
+
+
+def test_scd2_null_key_rows_classify_by_presence(spark):
+    """A NULL-keyed current row must not emit a garbage all-NULL
+    opened version (presence is not tested via key IS NOT NULL)."""
+    dim = spark.createDataFrame(
+        [(None, "a", date(2024, 1, 1), None), (1, "b", date(2024, 1, 1), None)],
+        "k long, v string, valid_from date, valid_to date",
+    )
+    snap = spark.createDataFrame([(None, "a"), (1, "b")], "k long, v string")
+    out = scd.scd2_apply(dim, snap, ["k"], ["v"], date(2024, 6, 1))
+    acts = sorted(
+        (r["k"], r["version_action"]) for r in out.collect()
+        if r["k"] is not None
+    ) + sorted(
+        (r["k"], r["version_action"]) for r in out.collect() if r["k"] is None
+    )
+    assert acts == [(1, "kept"), (None, "kept")]
+    # idempotent: re-apply keeps keeping
+    again = scd.scd2_apply(
+        out.drop("version_action"), snap, ["k"], ["v"], date(2024, 12, 1)
+    )
+    assert {r["version_action"] for r in again.collect()} == {"kept"}
+
+
+def test_cdc_compaction_rejects_reserved_column(spark):
+    from integritychecksforvldbs_spark.operators import scd as _scd
+
+    df = spark.createDataFrame(
+        [(1, 1, "u", 9)], "k long, seq long, op string, __cdc_latest_rn long"
+    )
+    with pytest.raises(ValueError, match="__cdc_latest_rn"):
+        _scd.cdc_latest_snapshot(df, ["k"], "seq", "op")

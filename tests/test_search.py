@@ -4,7 +4,9 @@ parity, edge semantics, determinism, and the plan-shape contract
 
 from __future__ import annotations
 
+import json
 import math
+import os
 import re
 
 import pytest
@@ -280,3 +282,108 @@ def test_vacuum_removes_only_orphan_segments(spark, tmp_path):
     ]
     assert before == after
     assert search.vacuum_bm25_index(spark, idx) == []  # idempotent
+
+
+def test_query_terms_ascii_whitespace_matches_corpus_tokenizer(spark):
+    """Java/DuckDB \\s is ASCII-only, so NBSP is a
+    corpus TOKEN; the Python query tokenizer must produce it too."""
+    text = "hello world"
+    got = search.query_terms(text)
+    assert " " in got  # Python's Unicode \s would swallow it
+    corpus_side = spark.sql(
+        "SELECT regexp_extract_all(lower('hello world'),"
+        " '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\\\s]', 0) AS t"
+    ).collect()[0]["t"]
+    assert sorted(set(corpus_side)) == got
+    # end-to-end: the NBSP-bearing doc scores on the NBSP term
+    docs = spark.createDataFrame(
+        [(1, text), (2, "hello world")], "doc_id long, text string"
+    )
+    scored = {
+        r["doc_id"]: r["n_terms_hit"]
+        for r in search.bm25_scores(docs, text).collect()
+    }
+    assert scored[1] == 3 and scored[2] == 2
+
+
+def test_bm25_quote_bearing_query(spark, tmp_path):
+    """\"don't\" tokenizes to a bare apostrophe term; the term list
+    must not be interpolated into SQL (that raised a ParseException)."""
+    docs = spark.createDataFrame(
+        [(1, "don't panic"), (2, "do panic"), (3, "don t")],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"] for r in search.bm25_scores(docs, "don't").collect()}
+    assert got == {1, 3}  # docs containing don / ' / t
+    idx = str(tmp_path / "qidx")
+    search.build_bm25_index(spark, docs, idx)
+    direct = [tuple(r) for r in search.bm25_topk(docs, "don't", k=3).collect()]
+    indexed = [
+        tuple(r) for r in search.bm25_topk_indexed(spark, idx, "don't", k=3).collect()
+    ]
+    assert direct == indexed
+    # and the oracle SQL stays parseable with the quoted term inlined
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = con.execute(search.bm25_oracle("don't", k=3)).fetchall()
+    assert [tuple(r) for r in direct] == [tuple(r) for r in want]
+
+
+def test_indexed_bm25_with_empty_docs_matches_direct(spark, tmp_path):
+    """Zero-token documents count toward N and avgdl; index stats must
+    come from the corpus, not the postings (or the scores drift)."""
+    docs = spark.createDataFrame(
+        [(1, "spark window"), (2, ""), (3, "   "), (4, "spark")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "eidx")
+    search.build_bm25_index(spark, docs, idx)
+    stats = spark.read.parquet(f"{idx}/stats").collect()[0]
+    assert stats["n_docs"] == 4  # not 2
+    direct = [tuple(r) for r in search.bm25_topk(docs, "spark", k=4).collect()]
+    indexed = [
+        tuple(r)
+        for r in search.bm25_topk_indexed(spark, idx, "spark", k=4).collect()
+    ]
+    assert direct == indexed
+
+
+def test_manifest_commit_is_crash_recoverable(spark, tmp_path):
+    """The manifest commit must be a rename-aside swap, not
+    a truncating overwrite — a crash mid-commit leaves either the old
+    manifest or a restorable .bak, never a destroyed index."""
+    corpus = str(tmp_path / "corpus")
+    _write_corpus(spark, corpus, [(1, "spark window")])
+    idx = str(tmp_path / "idx")
+    search.build_bm25_index(
+        spark, spark.read.parquet(corpus), idx, corpus_path=corpus
+    )
+    man_path = f"{idx}/manifest.json"
+    good = open(man_path).read()
+    # simulate the crash window: old manifest renamed aside, new one
+    # not yet renamed in (plus a torn tmp from the dying writer)
+    os.rename(man_path, man_path + ".bak")
+    with open(man_path + ".tmp", "w") as f:
+        f.write('{"segments": [')  # torn
+    man = search._read_manifest(spark, idx)
+    assert man is not None and json.dumps(man) == json.dumps(json.loads(good))
+    assert os.path.exists(man_path)  # .bak recovered into place
+    top = search.bm25_topk_indexed(spark, idx, "spark")
+    assert top.count() == 1
+
+
+def test_vacuum_refuses_without_manifest(spark, tmp_path):
+    """'No committed manifest' must NOT read as 'no live
+    segments' — vacuum refuses instead of deleting a recoverable
+    index wholesale."""
+    corpus = str(tmp_path / "corpus")
+    _write_corpus(spark, corpus, [(1, "spark window")])
+    idx = str(tmp_path / "idx")
+    search.build_bm25_index(
+        spark, spark.read.parquet(corpus), idx, corpus_path=corpus
+    )
+    os.remove(f"{idx}/manifest.json")  # torn-commit end state
+    assert search.vacuum_bm25_index(spark, idx) == []
+    assert os.path.exists(f"{idx}/postings/seg_00000")  # untouched

@@ -1,6 +1,7 @@
 """Exactly-once foreachBatch sinks: idempotent under batch replay,
 correct under incremental arrival."""
 
+import json
 import os
 import shutil
 import sys
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from integritychecksforvldbs_spark.sources.catalog import rename_or_raise  # noqa: E402
 from integritychecksforvldbs_spark.sources.loader import load_table  # noqa: E402
 from integritychecksforvldbs_spark.streaming import freshness, sink  # noqa: E402
 from tests.conftest import SF_DIR  # noqa: E402
@@ -184,3 +186,85 @@ def test_scd2_snapshot_sink_empty_batch_is_noop(spark, tmp_path):
     writer(spark.createDataFrame([], snap), 1)  # trigger without data
     got = {(r["k"], r["valid_to"]) for r in spark.read.parquet(dim).collect()}
     assert got == {(1, None)}  # nothing was closed
+
+
+class _FakeFS:
+    """Hadoop FileSystem stand-in whose rename() reports failure the
+    Hadoop way: boolean false, no exception."""
+
+    def __init__(self, ok: bool):
+        self.ok = ok
+        self.calls: list[tuple] = []
+
+    def rename(self, src, dst):
+        self.calls.append((src, dst))
+        return self.ok
+
+
+def test_rename_or_raise_surfaces_boolean_failure():
+    """A false return from FileSystem.rename() must
+    abort the swap (before .bak delete / ledger append), not proceed."""
+    rename_or_raise(_FakeFS(True), "a", "b")  # success: no raise
+    with pytest.raises(IOError, match="rename failed"):
+        rename_or_raise(_FakeFS(False), "a", "b")
+
+
+def test_sink_swap_aborts_on_failed_rename(spark, tmp_path, monkeypatch):
+    """A rename-in failure mid-swap must leave the .bak restorable and
+    the batch NOT in the ledger, so the replay re-applies it."""
+    from integritychecksforvldbs_spark.streaming import sink
+
+    state = str(tmp_path / "state")
+    w = sink.upsert_counts_sink(state, ["k"])
+    w(spark.createDataFrame([(1, 10)], "k long, n long"), 0)
+    assert {tuple(r) for r in spark.read.parquet(state).collect()} == {(1, 10)}
+
+    import integritychecksforvldbs_spark.sources.catalog as catalog
+
+    real = catalog._fs_and_path
+
+    class _FailingRenameFS:
+        def __init__(self, fs, fail_dst_suffix):
+            self._fs = fs
+            self._suffix = fail_dst_suffix
+
+        def rename(self, src, dst):
+            if str(dst).endswith(self._suffix):
+                return False  # the Hadoop way: silent boolean failure
+            return self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def patched(sp, path):
+        fs, hp = real(sp, path)
+        # fail only the rename INTO the live state path (tmp -> state)
+        return _FailingRenameFS(fs, "/state"), hp
+
+    monkeypatch.setattr(catalog, "_fs_and_path", patched)
+    batch2 = spark.createDataFrame([(1, 20)], "k long, n long")
+    with pytest.raises(IOError, match="rename failed"):
+        w(batch2, 1)
+    monkeypatch.undo()
+
+    # the .bak still holds the installed copy; the ledger does NOT
+    # contain batch 1 — a replay applies it for real
+    raw = catalog.read_text_file(spark, state + "._batches.json")
+    assert 1 not in set(json.loads(raw))
+    w(batch2, 1)  # replay succeeds now that renames work again
+    assert {tuple(r) for r in spark.read.parquet(state).collect()} == {(1, 20)}
+
+
+def test_corrupt_ledger_recovers_idempotently(spark, tmp_path):
+    """Partial JSON in the batch ledger (crash mid-write) must not
+    wedge the stream; re-applying is idempotent (not a permanent
+    JSONDecodeError loop)."""
+    state = str(tmp_path / "state")
+    writer = sink.upsert_counts_sink(state, ["k"])
+    writer(spark.createDataFrame([("a", 1)], "k string, n long"), 0)
+    with open(state + "._batches.json", "w") as f:
+        f.write("[0, 1")  # truncated write
+    writer(spark.createDataFrame([("a", 1)], "k string, n long"), 0)  # replay
+    writer(spark.createDataFrame([("b", 2)], "k string, n long"), 1)
+    got = sorted(map(tuple, spark.read.parquet(state).collect()))
+    assert got == [("a", 1), ("b", 2)]

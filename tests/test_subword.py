@@ -181,3 +181,32 @@ def test_wordpiece_reconstruction_property():
         assert subword.wordpiece_count(word, vocab) == len(pieces)
 
     check()
+
+
+def test_subword_rare_leading_char_not_unk(spark):
+    """Word-initial characters come from the FULL word
+    relation — a word whose leading char appears only in rare words
+    must still tokenize into pieces, not [UNK]."""
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over lazy dogs") for i in range(50)]
+        + [(100, "quizzer")],  # the only q-word; never in top-2
+        "doc_id long, text string",
+    )
+    vocab = subword.build_subword_vocab(docs, n_words=2, n_suffixes=50)
+    assert "q" in vocab  # first char harvested corpus-wide
+    toks = subword.wordpiece_tokenize("quizzer", frozenset(vocab))
+    assert toks != ["[UNK]"] and toks[0] == "q"
+
+
+def test_subword_overlong_words_excluded_from_vocab(spark):
+    """A whole word longer than max_piece_len can never be
+    matched by the bounded tokenizer scan, so it must not waste a
+    vocabulary slot."""
+    long_word = "x" * 40
+    docs = spark.createDataFrame(
+        [(i, f"{long_word} hi") for i in range(10)],
+        "doc_id long, text string",
+    )
+    vocab = subword.build_subword_vocab(docs, n_words=5, n_suffixes=10)
+    assert long_word not in vocab
+    assert "hi" in vocab

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from integritychecksforvldbs_spark import table_cli
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -302,3 +304,75 @@ def test_versioned_dv_and_sql_cli(spark, tmp_path, capsys):
         .collect()
     }
     assert got == {0: 0, 7: 99, 900: 1}
+
+
+def test_bloom_lookup_string_column_keeps_leading_zero(spark, tmp_path, capsys):
+    """--value 0123 against a STRING column must probe
+    '0123', not int 123 — the wrong hash silently skips files."""
+    path = str(tmp_path / "codes")
+    spark.createDataFrame(
+        [("0123", 1), ("0456", 2), ("789", 3)], "code string, v long"
+    ).coalesce(1).write.parquet(path)
+    _run(capsys, "bloom-build", "--path", path, "--column", "code")
+    s = _run(
+        capsys, "bloom-lookup", "--path", path, "--column", "code",
+        "--value", "0123",
+    )
+    assert s["rows"] == 1  # probing int 123 would skip the file: 0
+
+
+def test_zonemap_string_column_numeric_bounds(spark, tmp_path, capsys):
+    """Numeric-looking --lo/--hi on a STRING column must
+    compare as strings, not raise TypeError against pyarrow stats."""
+    path = str(tmp_path / "skeys")
+    spark.createDataFrame(
+        [("100",), ("200",), ("300",)], "k string"
+    ).coalesce(1).write.parquet(path)
+    s = _run(
+        capsys, "zonemap", "--path", path, "--column", "k",
+        "--lo", "100", "--hi", "150",
+    )
+    assert s["files_kept"] == 1
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["equal", "nested_out_in_input", "nested_input_in_out"],
+)
+def test_scd2_apply_rejects_overlapping_out(spark, tmp_path, case):
+    """Overwrite to --out that overlaps an input would
+    truncate the source mid-read; the CLI must refuse."""
+    dim = str(tmp_path / "dim")
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame(
+        [(1, "a", "2020-01-01", None)],
+        "k long, v string, valid_from string, valid_to string",
+    ).write.parquet(dim)
+    spark.createDataFrame([(1, "b")], "k long, v string").write.parquet(snap)
+    out = {
+        "equal": dim,
+        "nested_out_in_input": dim + "/part",
+        "nested_input_in_out": str(tmp_path),
+    }[case]
+    with pytest.raises(SystemExit) as ei:
+        table_cli.main(
+            ["scd2-apply", "--dim", dim, "--snapshot", snap,
+             "--keys", "k", "--tracked", "v",
+             "--as-of", "2021-01-01", "--out", out]
+        )
+    assert ei.value.code == 2
+
+
+def test_repair_apply_rejects_overlapping_out(spark, tmp_path):
+    rep = str(tmp_path / "rep")
+    plan = str(tmp_path / "plan")
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(rep)
+    spark.createDataFrame(
+        [(2, "b", "insert")], "k long, v string, op string"
+    ).write.parquet(plan)
+    with pytest.raises(SystemExit) as ei:
+        table_cli.main(
+            ["repair-apply", "--replica", rep, "--plan", plan,
+             "--keys", "k", "--out", rep]
+        )
+    assert ei.value.code == 2

@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from integritychecksforvldbs_spark.operators import search
 from integritychecksforvldbs_spark.operators import text as T
 
 
@@ -273,3 +274,25 @@ def test_fingerprint_kernel_equals_expression(spark):
     df2 = df.withColumn("doc_id", F.col("doc_id").cast("int"))
     got2 = {r["doc_id"]: r["fingerprint"] for r in fingerprint(df2).collect()}
     assert got2 == ref
+
+
+def test_token_regex_vertical_tab_agrees_with_oracle(spark, duck):
+    """With \\s the engines disagree on \\x0b (Java: VT is
+    whitespace; RE2: VT is a token).  The explicit class makes Spark,
+    DuckDB, and the Python query tokenizer agree."""
+    from integritychecksforvldbs_spark.operators.text import (
+        TOKEN_REGEX,
+        _spark_re,
+    )
+
+    text = "a\x0bb"
+    spark_toks = spark.sql(
+        f"SELECT regexp_extract_all('a' || chr(11) || 'b',"
+        f" '{_spark_re(TOKEN_REGEX)}', 0) AS t"
+    ).collect()[0]["t"]
+    duck_toks = duck.execute(
+        f"SELECT regexp_extract_all('a' || chr(11) || 'b', '{TOKEN_REGEX}')"
+    ).fetchall()[0][0]
+    py_toks = search.query_terms(text)
+    assert list(spark_toks) == list(duck_toks) == ["a", "b"]
+    assert py_toks == ["a", "b"]

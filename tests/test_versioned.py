@@ -3,6 +3,7 @@ isolation, optimistic concurrency, time travel, rollback, vacuum."""
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 
@@ -151,23 +152,6 @@ def test_vacuum_keep_versions_bounds_time_travel(spark, tmp_path):
     assert _rows(versioned.read(spark, path)) == [(10,), (11,), (20,), (21,)]
 
 
-def test_bodyless_claim_skipped_and_numbering_advances(spark, tmp_path):
-    """A version dir without a manifest body (committer died between
-    CAS and body write) commits nothing, is skipped by readers, and
-    its number is never reused."""
-    path = str(tmp_path / "tbl")
-    versioned.commit(spark, _mk(spark, 0, 3), path)
-    os.mkdir(os.path.join(path, "_versions", "v0000000002"))  # the corpse
-    assert [h.version for h in versioned.history(path)] == [1]
-    v = versioned.commit(spark, _mk(spark, 3, 6), path)
-    assert v == 3  # skips past the dead claim
-    assert _rows(versioned.read(spark, path)) == [(i,) for i in range(6)]
-    versioned.vacuum(path)  # age guard: the dead claim might be in flight
-    assert os.path.exists(os.path.join(path, "_versions", "v0000000002"))
-    versioned.vacuum(path, min_age_s=0)
-    assert not os.path.exists(os.path.join(path, "_versions", "v0000000002"))
-
-
 def test_merge_into_upserts_atomically(spark, tmp_path):
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
@@ -253,16 +237,23 @@ def test_versioned_batch_sink_exactly_once(spark, tmp_path):
 def test_versioned_batch_sink_crash_before_body_retries_cleanly(
     spark, tmp_path
 ):
-    """A commit whose body write died (bodyless version dir) committed
-    NOTHING — the replay must land the batch, not skip it."""
+    """A commit that died before its manifest link (a stale tmp body
+    naming batch 1) committed NOTHING — the replay must land the
+    batch at v2, not skip it."""
     path = str(tmp_path / "tbl")
     w = versioned.versioned_batch_sink(path)
     w(spark.createDataFrame([(1, "a")], "k long, v string"), 0)
-    # simulate the dead committer for batch 1: number claimed, no body
-    os.mkdir(os.path.join(path, "_versions", "v0000000002"))
+    # simulate the dead committer for batch 1: body written, never linked
+    with open(
+        os.path.join(path, "_versions", ".tmp-v0000000002-deadbeef"), "w"
+    ) as f:
+        json.dump(
+            {"version": 2, "mode": "append", "batch_id": 1, "files": []}, f
+        )
     b1 = spark.createDataFrame([(2, "b")], "k long, v string")
     w(b1, 1)  # the "replay" after that crash
     assert _rows(versioned.read(spark, path)) == [(1, "a"), (2, "b")]
+    assert [h.version for h in versioned.history(path)] == [1, 2]
 
 
 def _feed(df):
@@ -482,3 +473,159 @@ def test_evolved_append_read_nullfills_old_files(spark, tmp_path):
     assert got.columns == ["k", "extra"]
     rows = {r["k"]: r["extra"] for r in got.collect()}
     assert rows == {0: None, 1: None, 2: None, 10: 20, 11: 22}
+
+
+def test_merge_into_raises_on_duplicate_source_keys(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    versioned.commit(
+        spark,
+        spark.createDataFrame([(1, "a")], "k long, v string"),
+        path,
+    )
+    dup_src = spark.createDataFrame(
+        [(2, "b"), (2, "B")], "k long, v string"
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        versioned.merge_into(spark, path, dup_src, ["k"])
+    # NULL keys group together too (null-safe semantics)
+    null_dup = spark.createDataFrame(
+        [(None, "n"), (None, "N")], "k long, v string"
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        versioned.merge_into(spark, path, null_dup, ["k"])
+    # the table is untouched by the refused merges
+    assert _rows(versioned.read(spark, path)) == [(1, "a")]
+
+
+def test_merge_into_key_column_named_count(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    versioned.commit(
+        spark,
+        spark.createDataFrame([(1, "a"), (2, "b")], "count long, v string"),
+        path,
+    )
+    src = spark.createDataFrame([(2, "B"), (3, "c")], "count long, v string")
+    versioned.merge_into(spark, path, src, keys=["count"])
+    assert _rows(versioned.read(spark, path)) == [
+        (1, "a"), (2, "B"), (3, "c")
+    ]
+    # and the duplicate-source error still fires under that name
+    dup = spark.createDataFrame(
+        [(9, "x"), (9, "y")], "count long, v string"
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        versioned.merge_into(spark, path, dup, keys=["count"])
+
+
+def test_vacuum_expires_manifests_newest_first(spark, tmp_path, monkeypatch):
+    """The removal sequence vacuum issues is strictly descending, so a
+    delta is always removed before the base it folds through."""
+    path = str(tmp_path / "tbl")
+    for i in range(7):  # v1..v7: v1 full, v2..v7 deltas (ckpt at 10 never hit)
+        versioned.commit(spark, _mk(spark, i, i + 1), path)
+    removed_order = []
+    orig = versioned._remove_manifest
+
+    def spy(p, v):
+        removed_order.append(v)
+        orig(p, v)
+
+    monkeypatch.setattr(versioned, "_remove_manifest", spy)
+    versioned.vacuum(path, keep_versions=2, min_age_s=0.0)
+    expired = [v for v in removed_order if v <= 5]
+    assert expired == sorted(expired, reverse=True), removed_order
+    # survivors still read
+    assert len(_rows(versioned.read(spark, path))) == 7
+
+
+def test_vacuum_survives_broken_delta_chain(spark, tmp_path):
+    """A log where an interrupted ascending-order vacuum deleted a
+    delta's base but not the delta itself: history() skips the
+    unresolvable expired delta instead of raising, vacuum() completes
+    and removes the orphan manifest, and the retained tip still
+    reads."""
+    path = str(tmp_path / "tbl")
+    for i in range(5):  # v1 full, v2..v5 deltas
+        versioned.commit(spark, _mk(spark, i, i + 1), path)
+    # materialize the tip's fold as a checkpoint (what a completed
+    # vacuum would have done), then simulate the interrupted state:
+    # v1 (the base) deleted, v2 (an expired delta) still present
+    versioned._write_checkpoint(path, 5)
+    versioned._remove_manifest(path, 1)
+    # history() must not raise, and must still report the resolvable tip
+    hist = versioned.history(path)
+    assert 5 in [vi.version for vi in hist]
+    assert 2 not in [vi.version for vi in hist]  # unresolvable orphan skipped
+    # vacuum can now run to completion and removes the orphan manifest
+    versioned.vacuum(path, keep_versions=1, min_age_s=0.0)
+    assert versioned._read_manifest(path, 2) is None
+    assert len(_rows(versioned.read(spark, path))) == 5
+    # and a second vacuum is a no-op, not an error
+    versioned.vacuum(path, keep_versions=1, min_age_s=0.0)
+
+
+def test_latest_pointer_bounds_manifest_io(spark, tmp_path, monkeypatch):
+    """On a long log, resolving the latest version costs one hint GET
+    + one manifest read + one miss probe — not O(#versions) listing
+    plus reads (the object-store LIST-per-read hazard)."""
+    path = str(tmp_path / "tbl")
+    for i in range(25):
+        versioned.commit(spark, _mk(spark, i, i + 1), path)
+    reads, lists = [], []
+    orig_read, orig_versions = versioned._read_manifest, versioned._versions
+
+    def spy_read(p, v):
+        reads.append(v)
+        return orig_read(p, v)
+
+    def spy_versions(p):
+        lists.append(p)
+        return orig_versions(p)
+
+    monkeypatch.setattr(versioned, "_read_manifest", spy_read)
+    monkeypatch.setattr(versioned, "_versions", spy_versions)
+    v, man = versioned._latest_committed(path)
+    assert v == 25 and man["version"] == 25
+    assert lists == []  # never listed the log
+    # hint read + v25 body (+ its delta chain fold) + one v26 miss;
+    # chain length is bounded by CHECKPOINT_EVERY, never O(history)
+    assert len(reads) <= versioned.CHECKPOINT_EVERY + 2
+
+
+def test_latest_pointer_stale_low_probes_forward(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    for i in range(5):
+        versioned.commit(spark, _mk(spark, i, i + 1), path)
+    # regress the pointer as a lagging racer would leave it
+    versioned._write_latest_hint(path, 2)
+    v, man = versioned._latest_committed(path)
+    assert v == 5
+    assert len(_rows(versioned.read(spark, path))) == 5
+
+
+def test_latest_pointer_missing_or_damaged_falls_back(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    for i in range(3):
+        versioned.commit(spark, _mk(spark, i, i + 1), path)
+    hint = os.path.join(path, "_versions", "_latest.json")
+    os.unlink(hint)  # a table predating the pointer
+    assert versioned._latest_committed(path)[0] == 3
+    with open(hint, "w") as f:
+        f.write("{not json")  # a torn/damaged pointer
+    assert versioned._latest_committed(path)[0] == 3
+    with open(hint, "w") as f:
+        json.dump({"version": 999}, f)  # names a version that never existed
+    assert versioned._latest_committed(path)[0] == 3
+
+
+def test_latest_pointer_written_by_every_commit_kind(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 4), path)
+    assert versioned._read_latest_hint(path) == 1
+    versioned.delete_where(spark, path, "k = 1")
+    assert versioned._read_latest_hint(path) == 2
+    versioned.rollback(spark, path, version=1)
+    assert versioned._read_latest_hint(path) == 3
+    dst = str(tmp_path / "clone")
+    versioned.clone(spark, path, dst)
+    assert versioned._read_latest_hint(dst) == 1

@@ -9,14 +9,17 @@ file list built from the stale base, so the CAS *succeeded* and the
 interloper's acknowledged files vanished from the latest snapshot.
 
 The fix derives base and claim from ONE view (``_next_claim``): the
-claim is exactly ``latest_committed + 1`` (stepping only over verified
-legacy corpse dirs), so an interleaved commit surfaces as a stale-view
-``None`` or a lost CAS — both re-base — never a silent skip.  These
+claim is exactly ``latest_committed + 1``, so an interleaved commit
+surfaces as a stale-view ``None`` or a lost CAS — both re-base — never a silent skip.  These
 tests FORCE the interleaving at each window instead of hoping a
 thread scheduler finds it.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,21 +105,6 @@ def test_stale_view_at_claim_time_returns_none_and_rebases(
     assert state["saw_none"]  # the stale view was DETECTED, not skipped
     assert v == 3
     assert _rows(versioned.read(spark, path)) == [(i,) for i in range(15)]
-
-
-def test_next_claim_skips_only_verified_legacy_corpses(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "tbl")
-    versioned.commit(spark, _mk(spark, 0, 3), path)
-    # a legacy bodyless claim dir at slot 2: holds the number, commits
-    # nothing — the claim steps over it
-    os.mkdir(os.path.join(path, "_versions", "v0000000002"))
-    assert versioned._next_claim(path, 1) == 3
-    # a COMMITTED slot is never skipped: stale view → None
-    v = versioned.commit(spark, _mk(spark, 3, 6), path)
-    assert v == 3
-    assert versioned._next_claim(path, 1) is None
 
 
 def test_interleaved_commit_vs_overwrite_conflicts_loudly(
@@ -322,3 +310,93 @@ def test_v1_race_conflicts_on_divergent_winner_metadata(
     v = versioned.commit(spark, _mk(spark, 0, 10), path2)
     assert v == 2
     assert versioned.read(spark, path2).count() == 15
+
+
+def test_manifest_is_atomic_file_never_bodyless(spark, tmp_path):
+    """A committed version is ONE complete json file — there is no
+    claim-then-write window in which a version number exists without a
+    readable body."""
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    vdir = os.path.join(path, "_versions")
+    # ignore the `_latest` pointer (a hint, not part of the log's
+    # version records): the invariant here is about version ARTIFACTS
+    names = sorted(n for n in os.listdir(vdir) if n.startswith("v"))
+    assert names == ["v0000000001.json"]
+    with open(os.path.join(vdir, names[0])) as f:
+        man = json.load(f)
+    assert man["version"] == 1 and man["files"]
+
+
+def test_install_cas_loser_leaves_no_residue(spark, tmp_path):
+    """The loser of the version CAS changes nothing: the winner's
+    manifest is untouched and no tmp file remains."""
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    won = versioned._install_manifest(
+        path, 1, {"version": 1, "mode": "append", "files": ["bogus"]}
+    )
+    assert won is False
+    man = versioned._read_manifest(path, 1)
+    assert man["files"] != ["bogus"]
+    assert not [
+        n for n in os.listdir(os.path.join(path, "_versions"))
+        if n.startswith(".tmp-")
+    ]
+
+
+def test_crashed_install_tmp_is_invisible_and_vacuumed(spark, tmp_path):
+    """A committer that died BEFORE the link leaves only a tmp file:
+    it consumes no version number, no reader sees it, and vacuum
+    reclaims it (age-guarded)."""
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    vdir = os.path.join(path, "_versions")
+    tmp = os.path.join(vdir, ".tmp-v0000000002-deadbeef")
+    with open(tmp, "w") as f:
+        json.dump({"version": 2, "mode": "append", "files": []}, f)
+    assert versioned._versions(path) == [1]  # number NOT consumed
+    v = versioned.commit(spark, _mk(spark, 3, 6), path)
+    assert v == 2  # the crash did not burn a slot
+    versioned.vacuum(path)  # young tmp: possibly in-flight, retained
+    assert os.path.exists(tmp)
+    versioned.vacuum(path, min_age_s=0)
+    assert not os.path.exists(tmp)
+    assert _rows(versioned.read(spark, path)) == [(i,) for i in range(6)]
+
+
+def test_concurrent_appends_never_lose_an_acknowledged_commit(
+    spark, tmp_path
+):
+    """The lost-update scenario, stress-raced: every commit
+    that RETURNED a version must have its rows in the final snapshot —
+    no committer may re-base past another's in-flight commit."""
+    path = str(tmp_path / "tbl")
+    n_threads, per = 6, 5
+    errs: list[Exception] = []
+
+    def worker(i: int) -> None:
+        try:
+            versioned.commit(
+                spark, _mk(spark, i * per, (i + 1) * per), path
+            )
+        except Exception as e:  # pragma: no cover - diagnostic
+            errs.append(e)
+
+    threads = [
+        threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errs
+    assert _rows(versioned.read(spark, path)) == [
+        (i,) for i in range(n_threads * per)
+    ]
+    # and the log is gap-free: versions 1..n, each complete
+    assert versioned._versions(path) == list(range(1, n_threads + 1))
+    assert all(
+        versioned._read_manifest(path, v) is not None
+        for v in versioned._versions(path)
+    )

@@ -6,6 +6,8 @@ contract."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -532,3 +534,73 @@ def test_schema_tracking_e2e_kill_rename_restart(registered, tmp_path):
     )
     run()  # restarted reader validates the rename and resumes
     assert sorted(got) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def _stream_reader(path, starting_version=0):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from integritychecksforvldbs_spark.sources.versioned_datasource import (
+        _VersionedStreamReader,
+    )
+
+    return _VersionedStreamReader(
+        path, starting_version,
+        StructType([StructField("k", LongType(), True)]),
+    )
+
+
+def test_latest_offset_raises_on_vacuumed_hole(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    versioned.commit(spark, _mk(spark, 3, 6), path)
+    versioned.commit(spark, _mk(spark, 6, 9), path)
+    os.unlink(os.path.join(path, "_versions", "v0000000002.json"))
+    r = _stream_reader(path)
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        r.latestOffset()
+
+
+def test_restarted_stream_survives_vacuum_behind_checkpoint(
+    spark, tmp_path
+):
+    """Twelve commits (checkpoint at v10), vacuum retains the last
+    two: a reader whose checkpoint (batch start) is past the vacuumed
+    range must keep running — latestOffset seeds at the retained
+    horizon instead of raising on the expired hole."""
+    path = str(tmp_path / "tbl")
+    for i in range(12):
+        versioned.commit(spark, _mk(spark, i * 3, (i + 1) * 3), path)
+    versioned.vacuum(path, keep_versions=2, min_age_s=0)
+    # v11 checkpointed, chain expired: only the retained tail remains
+    assert versioned._versions(path) == [11, 12]
+    r = _stream_reader(path)  # a RESTART re-instantiates the reader
+    assert r.latestOffset() == {"version": 12}
+    # the batch its checkpoint actually needs resolves fine
+    files = r._files_between(11, 12)
+    assert len(files) >= 1
+    # a second trigger keeps working (frontier caches past the hole)
+    assert r.latestOffset() == {"version": 12}
+
+
+def test_replay_from_vacuumed_range_still_fails_loudly(spark, tmp_path):
+    """The loud error lives where it belongs: a batch RANGE that needs
+    an expired manifest cannot be served and must not be skipped."""
+    path = str(tmp_path / "tbl")
+    for i in range(12):
+        versioned.commit(spark, _mk(spark, i * 3, (i + 1) * 3), path)
+    versioned.vacuum(path, keep_versions=2, min_age_s=0)
+    r = _stream_reader(path)
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        r._files_between(0, 12)
+
+
+def test_mid_log_hole_still_raises(spark, tmp_path):
+    """An EXTERNALLY damaged log (hole between retained manifests) is
+    not the vacuum case and still fails loudly at latestOffset."""
+    path = str(tmp_path / "tbl")
+    for i in range(3):
+        versioned.commit(spark, _mk(spark, i * 3, (i + 1) * 3), path)
+    os.unlink(os.path.join(path, "_versions", "v0000000002.json"))
+    r = _stream_reader(path)
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        r.latestOffset()

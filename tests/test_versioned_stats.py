@@ -214,3 +214,40 @@ def test_stats_survive_rollback_and_merge(spark, tmp_path):
     summ = versioned.stats_summary(path, ["k"])
     assert summ["k"]["min"] == 0 and summ["k"]["max"] == 34 and summ["k"]["ok"]
     assert versioned.row_count(spark, path) == 35
+
+
+def test_commit_refuses_unreadable_footer_instead_of_empty_stats(
+    spark, tmp_path, monkeypatch
+):
+    """The poisoned-manifest scenario: if a freshly written file's
+    footer cannot be read at census time, commit must raise — not
+    record n_rows=0 and let row_count/read_where silently drop the
+    file's rows forever."""
+    from integritychecksforvldbs_spark.sources import zonemap
+
+    path = str(tmp_path / "tbl")
+    orig = zonemap.build_zone_maps
+
+    def failing(spark_, data_dir, columns):
+        zm = orig(spark_, data_dir, columns)
+        return {
+            c: [
+                zonemap.ZoneEntry(e.path, -1, None, None, 0, False)
+                for e in entries
+            ]
+            for c, entries in zm.items()
+        }
+
+    monkeypatch.setattr(zonemap, "build_zone_maps", failing)
+    with pytest.raises(IOError, match="unreadable"):
+        versioned.commit(spark, _mk(spark, 0, 5), path)
+    # nothing committed: the table has no poisoned version
+    assert versioned._versions(path) == []
+
+
+def test_empty_dataframe_commit_still_records_trustworthy_zero(
+    spark, tmp_path
+):
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 5).filter("k < 0"), path)
+    assert versioned.row_count(spark, path) == 0

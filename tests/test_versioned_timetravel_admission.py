@@ -180,3 +180,40 @@ def test_rollback_to_timestamp(spark, tmp_path):
         versioned.rollback(spark, path, version=1, timestamp=t1)
     with pytest.raises(ValueError, match="needs a version"):
         versioned.rollback(spark, path)
+
+
+def test_version_at_reads_o_versions_after_timestamp(
+    spark, tmp_path, monkeypatch
+):
+    path = str(tmp_path / "tbl")
+    for i in range(12):
+        versioned.commit(spark, _mk(spark, i, i + 1), path)
+    ts_latest = versioned._committed_at(
+        path, 12, versioned._read_manifest(path, 12)
+    )
+    reads = []
+    orig = versioned._read_manifest
+
+    def spy(p, v):
+        reads.append(v)
+        return orig(p, v)
+
+    monkeypatch.setattr(versioned, "_read_manifest", spy)
+    assert versioned.version_at(path, ts_latest + 1.0) == 12
+    # newest-first with early stop: one manifest read, not twelve
+    assert len(reads) == 1 and reads[0] == 12
+    reads.clear()
+    ts_v10 = versioned._committed_at(
+        path, 10, versioned._read_manifest(path, 10)
+    )
+    monkeypatch.setattr(versioned, "_read_manifest", spy)
+    assert versioned.version_at(path, ts_v10) == 10
+    assert set(reads) == {12, 11, 10}
+
+
+def test_version_at_still_errors_before_first_commit(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    ts = versioned._committed_at(path, 1, versioned._read_manifest(path, 1))
+    with pytest.raises(FileNotFoundError):
+        versioned.version_at(path, ts - 100.0)

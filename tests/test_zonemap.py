@@ -4,7 +4,8 @@ files."""
 
 from __future__ import annotations
 
-from datetime import datetime
+import os
+from datetime import date, datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -276,3 +277,54 @@ def test_sidecar_refresh_rebuilds_when_missing(spark, tmp_path):
     assert zonemap.refresh_zone_sidecar(spark, table, "k", side) == "rebuilt"
     kept, skipped = zonemap.sidecar_prune(spark, table, "k", 0, 9, side)
     assert kept and not skipped
+
+
+def test_zonemap_date_bounds_on_timestamp_column(spark, tmp_path):
+    """date bounds vs timestamp footer stats must compare (promoted to
+    midnight — exactly Spark's DATE-vs-TIMESTAMP cast), not raise."""
+    from integritychecksforvldbs_spark.sources.maintenance import compact_table
+
+    dest = str(tmp_path / "sorted")
+    compact_table(
+        spark, f"{SF_DIR}/orders.parquet", dest,
+        target_bytes=20_000, sort_by=["o_orderdate"],
+    )
+    zm = zonemap.build_zone_map(spark, dest, "o_orderdate")
+    kept_d, skipped_d = zonemap.prune_files(
+        zm, date(1996, 1, 1), date(1996, 12, 31)
+    )
+    kept_t, skipped_t = zonemap.prune_files(
+        zm, datetime(1996, 1, 1), datetime(1996, 12, 31)
+    )
+    assert skipped_d and (kept_d, skipped_d) == (kept_t, skipped_t)
+
+
+def _mk(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("k"))
+
+
+def test_read_zones_distinguishes_failure_from_empty(spark, tmp_path):
+    good = str(tmp_path / "good")
+    _mk(spark, 0, 10).coalesce(1).write.parquet(good)
+    fname = next(
+        os.path.join(good, n)
+        for n in os.listdir(good)
+        if n.endswith(".parquet")
+    )
+    e = zonemap._read_zones(fname, ["k"])["k"]
+    assert e.n_rows == 10 and e.has_stats
+    # truncate the file: the footer read now FAILS
+    with open(fname, "r+b") as f:
+        f.truncate(8)
+    bad = zonemap._read_zones(fname, ["k"])["k"]
+    assert bad.n_rows == -1 and not bad.has_stats
+    # a genuinely empty part-file is trustworthy n_rows=0
+    empty = str(tmp_path / "empty")
+    _mk(spark, 0, 10).filter("k < 0").coalesce(1).write.parquet(empty)
+    ename = next(
+        os.path.join(empty, n)
+        for n in os.listdir(empty)
+        if n.endswith(".parquet")
+    )
+    ez = zonemap._read_zones(ename, ["k"])["k"]
+    assert ez.n_rows == 0
