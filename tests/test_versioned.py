@@ -256,6 +256,25 @@ def test_versioned_batch_sink_crash_before_body_retries_cleanly(
     assert [h.version for h in versioned.history(path)] == [1, 2]
 
 
+def test_version_directory_is_not_a_version(spark, tmp_path):
+    """A version is a ``vN.json`` file and nothing else: a ``vN/``
+    directory holding a ``manifest.json`` is not listed, not read and
+    holds no slot, so the next commit lands at vN beside it."""
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    d = os.path.join(path, "_versions", "v0000000002")
+    os.mkdir(d)
+    with open(os.path.join(d, "manifest.json"), "w") as f:
+        json.dump({"version": 2, "mode": "overwrite", "files": []}, f)
+    assert versioned._versions(path) == [1]
+    assert versioned._read_manifest(path, 2) is None
+    assert [h.version for h in versioned.history(path)] == [1]
+    v = versioned.commit(spark, _mk(spark, 3, 6), path)
+    assert v == 2
+    assert _rows(versioned.read(spark, path)) == [(i,) for i in range(6)]
+    assert versioned.history(path)[-1].mode == "append"
+
+
 def _feed(df):
     return sorted(
         (r["_change_type"], r["k"]) for r in df.collect()

@@ -345,6 +345,23 @@ def test_install_cas_loser_leaves_no_residue(spark, tmp_path):
     ]
 
 
+def test_next_claim_is_exactly_one_past_the_view(spark, tmp_path):
+    """The claim is ``cur_v + 1`` or None, never a higher slot: an
+    unlinked tmp body does not take its slot, and a committed slot
+    marks the caller's view stale."""
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    assert versioned._next_claim(path, 1) == 2
+    with open(
+        os.path.join(path, "_versions", ".tmp-v0000000002-deadbeef"), "w"
+    ) as f:
+        json.dump({"version": 2, "mode": "append", "files": []}, f)
+    assert versioned._next_claim(path, 1) == 2
+    assert versioned.commit(spark, _mk(spark, 3, 6), path) == 2
+    assert versioned._next_claim(path, 1) is None  # stale view
+    assert versioned._next_claim(path, 2) == 3
+
+
 def test_crashed_install_tmp_is_invisible_and_vacuumed(spark, tmp_path):
     """A committer that died BEFORE the link leaves only a tmp file:
     it consumes no version number, no reader sees it, and vacuum

@@ -560,6 +560,24 @@ def test_latest_offset_raises_on_vacuumed_hole(spark, tmp_path):
         r.latestOffset()
 
 
+def test_latest_offset_stops_below_unlinked_body(spark, tmp_path):
+    """A tmp body at the next slot (a commit in flight, or one that
+    died before its link) is not a version: the offset stays at the
+    last committed version without raising, and advances once the
+    slot really commits."""
+    path = str(tmp_path / "tbl")
+    versioned.commit(spark, _mk(spark, 0, 3), path)
+    with open(
+        os.path.join(path, "_versions", ".tmp-v0000000002-deadbeef"), "w"
+    ) as f:
+        f.write('{"version": 2, "mode": "append", "files": []}')
+    r = _stream_reader(path)
+    assert r.latestOffset() == {"version": 1}
+    versioned.commit(spark, _mk(spark, 3, 6), path)
+    assert r.latestOffset() == {"version": 2}
+    assert len(r._files_between(1, 2)) > 0
+
+
 def test_restarted_stream_survives_vacuum_behind_checkpoint(
     spark, tmp_path
 ):

@@ -159,3 +159,28 @@ def test_vacuum_expires_backend_manifests_and_fs_data(spark, logged_table):
     for d in removed:
         assert not os.path.exists(d)
     assert versioned.row_count(spark, path) == 3
+
+
+def test_bodyless_backend_record_holds_its_slot(spark, tmp_path):
+    """DirCasBackend installs in two steps (mkdir, then body).  A
+    record without a body is an in-flight or crashed write: it is no
+    commit, readers stay at the last committed version, and a writer
+    refuses the slot and stalls loudly instead of claiming past it."""
+    import os
+
+    path = str(tmp_path / "tbl")
+    log = str(tmp_path / "log")
+    versioned.use_log_backend(path, DirCasBackend(log))
+    try:
+        versioned.commit(spark, _mk(spark, 0, 3), path)
+        os.mkdir(os.path.join(log, "v0000000002"))  # body never written
+        assert versioned._versions(path) == [1, 2]
+        assert versioned._read_manifest(path, 2) is None
+        assert versioned._latest_committed(path)[0] == 1
+        assert [h.version for h in versioned.history(path)] == [1]
+        assert versioned._next_claim(path, 1) is None
+        with pytest.raises(versioned.ConflictError):
+            versioned.commit(spark, _mk(spark, 3, 6), path)
+        assert _rows(versioned.read(spark, path)) == [(i,) for i in range(3)]
+    finally:
+        versioned.use_log_backend(path, None)
